@@ -106,14 +106,3 @@ def conditional_change_event(
     running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return F.sum(changed).over(running)
 
-
-def dedup_rank(
-    partition_cols: Sequence[str | Column],
-    order_cols: Sequence[Column],
-) -> Column:
-    """``row_number`` helper for QUALIFY-style dedup (Spark has no QUALIFY —
-    callers add the column, filter ``== 1``, drop it)."""
-    w = Window.partitionBy(
-        *[F.col(c) if isinstance(c, str) else c for c in partition_cols]
-    ).orderBy(*order_cols)
-    return F.row_number().over(w)

@@ -460,9 +460,16 @@ def scd2_incremental(
     ``broadcast_source=None`` (default) sizes the decision at run time: the
     persisted source's row count is compared against ``broadcast_max_rows``
     and the merge falls back to a shuffled hash/sort-merge join when a batch
-    touches too many keys to broadcast (the backfill-the-world case) — the
-    count is free, it materializes the persisted source the downstream
-    action needs anyway.  Pass True/False to force either shape.
+    touches too many keys to broadcast (the backfill-the-world case).  The
+    count materializes the persisted source the downstream action needs
+    anyway, but its jobs run eagerly, ahead of the caller's write.  Pass
+    True/False to force either shape.
+
+    A bucketed ``ScdTable`` merge attaches ``_scd_row_bound`` to the target
+    slice it passes in: the slice's manifest row count plus the batch's row
+    count.  Every source row comes from one target-slice row or one batch
+    row, so a bound within ``broadcast_max_rows`` settles the broadcast
+    without the count — the same decision, made before any job runs.
     """
     # Validate the RAW batch BEFORE alignment: a batch missing a
     # config-critical column (updated_at, a unique_key component,
@@ -473,6 +480,7 @@ def scd2_incremental(
     # can legitimately differ between the two sides.
     cfg = cfg.validate()
     cfg.validate_against_schema(batch.schema)
+    row_bound = getattr(target, "_scd_row_bound", None)
     # Schema evolution (add/drop column) aligns the two sides next; a
     # no-op driver-side when schemas agree (see align_evolved_schemas).
     target, batch = align_evolved_schemas(target, batch, cfg)
@@ -483,7 +491,9 @@ def scd2_incremental(
     # inserts anti-join — persist so its window chain runs once.
     source = source.persist()
     if broadcast_source is None:
-        broadcast_source = source.count() <= broadcast_max_rows
+        broadcast_source = (
+            row_bound is not None and row_bound <= broadcast_max_rows
+        ) or source.count() <= broadcast_max_rows
     audit_cols = cfg.audit_columns
     all_cols = business_cols + audit_cols
 

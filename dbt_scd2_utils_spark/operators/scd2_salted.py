@@ -476,6 +476,15 @@ def scd2_incremental_salted(
     _require_orderable_updated_at(target, cfg)
     keys = list(cfg.unique_key)
     own_hot = hot_keys is None
+    # A bucketed ScdTable attaches the merge input's row bound (target
+    # slice + batch, see scd2_incremental): no key can count more rows
+    # than the whole input, so below the threshold the plain route is
+    # settled without the detection jobs.
+    row_bound = getattr(target, "_scd_row_bound", None)
+    if own_hot and row_bound is not None and row_bound < hot_key_threshold:
+        if route_log is not None:
+            route_log.append(("plain", 0))
+        return scd2_incremental(target, batch, cfg, **kwargs)
     if own_hot:
         cand = batch.select(*keys).distinct()
         cond = _ns_eq("l", "h", keys)
@@ -555,7 +564,9 @@ def scd2_incremental_adaptive(
     tests/test_property_salted_scd2.py).  Hotness counts TARGET versions
     of batch keys plus batch rows, not batch rows alone: a key that grew
     hot across ten thousand small batches must still route salted, which
-    a batch-only count would never notice.
+    a batch-only count would never notice.  On a bucketed ``ScdTable``
+    whose manifest row counts bound the merge input below the threshold,
+    the aggregation is skipped: no key can be hot.
 
     The default threshold sits inside the measured plain/salted crossover
     band for the composed (bucketed × salted) sink — see

@@ -1062,6 +1062,25 @@ class ScdTable:
             out.extend(paths)
         return out, any_stale
 
+    @staticmethod
+    def _slice_row_bound(
+        manifest: dict | None, affected: list, stale: bool
+    ) -> int | None:
+        """Rows of the affected buckets' target slice, from the manifest's
+        per-bucket footer counts — None unless every one is known: a stale
+        or legacy manifest, or a ``rows: -1`` entry, gives no bound.  A
+        bucket with no entry in a new-style manifest holds no rows (see
+        ``_affected_files``)."""
+        if stale or manifest is None or "gen" not in manifest:
+            return None
+        total = 0
+        for b in affected:
+            rows = manifest["buckets"].get(str(b), {"rows": 0}).get("rows", -1)
+            if rows < 0:
+                return None
+            total += rows
+        return total
+
     def _write_meta(self) -> None:
         """Record how this relation was built so the next run can apply the
         reference's materialization-match rule (is_incremental.sql:18-28:
@@ -1299,10 +1318,10 @@ class ScdTable:
         for leftover in glob.glob(os.path.join(self.path, f".{BUCKET_COL}=*__old")):
             shutil.rmtree(leftover, ignore_errors=True)
         self._sweep_stale_stages()
-        affected = [
-            r[0]
-            for r in batch.select(self._bucket_expr(batch).alias("b")).distinct().collect()
-        ]
+        # One action lists the affected buckets AND counts the batch — the
+        # batch half of the merge's row bound (see _slice_row_bound).
+        bucket_rows = batch.groupBy(self._bucket_expr(batch).alias("b")).count().collect()
+        affected = [r[0] for r in bucket_rows]
         if not affected:
             # Empty incremental batch (a realistic CDC input): no bucket is
             # touched, so the merge is a no-op — and `.repartition(0, ...)`
@@ -1380,6 +1399,12 @@ class ScdTable:
             # No files AND no recorded schema (legacy empty table): derive
             # the SCD output schema from the batch itself.
             target_slice = scd2_initial_load(batch.limit(0), self.cfg)
+        slice_rows = self._slice_row_bound(manifest, affected, stale)
+        if slice_rows is not None:
+            # Travels on the target slice like _scd_intermediates on a
+            # result: the stock merges read it to skip their probe jobs,
+            # any other merge_fn ignores it.
+            target_slice._scd_row_bound = slice_rows + sum(r[1] for r in bucket_rows)
         self.last_phase_times = {"list_affected": time.perf_counter() - t0}
         t0 = time.perf_counter()
         merged = (merge_fn or self.merge_fn)(target_slice, batch, self.cfg)

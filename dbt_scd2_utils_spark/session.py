@@ -20,7 +20,15 @@ def get_spark(
     """``ui=True`` enables the Spark UI so diagnostic scripts can read
     per-task metrics (peak execution memory, shuffle read bytes) from the
     REST API — off by default: the benches and tests don't want the
-    listener/HTTP overhead."""
+    listener/HTTP overhead.
+
+    DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+    is off for the same reason: with it on, PySpark wraps every Column and
+    DataFrame call in a call-site capture (an active-session lookup, a conf
+    read, JVM calls and a Python stack walk), a cost paid on each of the
+    hundreds of Column calls one merge plan makes.  The trade-off: Spark
+    errors raised by DataFrame operations lose the Python call-site
+    fragment of their query context.  Python tracebacks are unchanged."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     spark = (
@@ -39,6 +47,7 @@ def get_spark(
         # scopes it locally (entry.q_scd2_sequence_replay).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "true" if ui else "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     return spark

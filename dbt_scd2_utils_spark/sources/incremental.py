@@ -6,10 +6,13 @@ semantics (``macros/builtin_overrides/is_incremental.sql:18-28``).
 
 The reference's scalar subquery
 ``(select coalesce(max(_loaded_at), '1900-01-01') from target) < loaded_at``
-becomes a driver-side aggregate + a pushed-down filter: the max() runs as a
-tiny Spark job over the target's ``loaded_at`` column (parquet min/max
-statistics make this a metadata-mostly scan), then the comparison is a plain
-literal predicate Catalyst pushes into the source's parquet scan.
+becomes a driver-side aggregate + a pushed-down filter: the max() is an
+eager aggregate over the target (two Spark jobs under AQE: the partial
+aggregate's shuffle stage, then the final one) that reads every row of the
+``loaded_at`` column.  Column pruning keeps the scan to that one column, but
+Spark's DSv1 parquet source has no aggregate pushdown, so the footers' min/max
+statistics are not used.  The comparison is then a plain literal predicate
+Catalyst pushes into the source's parquet scan.
 """
 
 from __future__ import annotations
@@ -65,13 +68,6 @@ def incremental_source(
         cutoff = run_started_at.replace(microsecond=0)
         out = out.filter(F.col(loaded_at_col) <= F.lit(cutoff))
     return out
-
-
-def table_exists(spark: SparkSession, name: str) -> bool:
-    """is_incremental's relation-exists probe against the metastore
-    (is_incremental.sql:18-28; full-refresh / materialization-match checks
-    live in the build planner)."""
-    return spark.catalog.tableExists(name)
 
 
 def is_incremental_run(

@@ -1455,6 +1455,138 @@ def test_bucketed_sink_composes_with_salted_merge(spark, tmp_path):
     _assert_same(ScdTable(spark, path, CFG).read(), out)
 
 
+# ---- manifest row bound: merge routing without probe jobs -----------------
+
+
+class _MergeProbe:
+    """``merge_fn`` wrapper recording, per merge call, the row bound the
+    sink attached to the target slice, whether the merge broadcasts its
+    source (the hint on the target LEFT JOIN source), and the Spark jobs
+    the call submitted (under its own job group) before returning."""
+
+    def __init__(self, spark, strategy):
+        self.sc = spark.sparkContext
+        self.strategy = strategy
+        self.bounds, self.broadcasts, self._groups = [], [], []
+
+    def __call__(self, target, batch, cfg):
+        group = f"merge_fn-{id(self)}-{len(self._groups)}"
+        self._groups.append(group)
+        self.bounds.append(getattr(target, "_scd_row_bound", None))
+        self.sc.setJobGroup(group, "merge_fn")
+        try:
+            out = self.strategy(target, batch, cfg)
+        finally:
+            self.sc.setLocalProperty("spark.jobGroup.id", None)
+            self.sc.setLocalProperty("spark.job.description", None)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        self.broadcasts += [
+            "rightHint=(strategy=broadcast)" in line
+            for line in plan.splitlines() if "Join LeftOuter" in line
+        ]
+        return out
+
+    def jobs(self) -> list:
+        """Jobs of the last call, once the listener bus has caught up."""
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(self.sc.statusTracker().getJobIdsForGroup(self._groups[-1]))
+
+
+def _probed_table(spark, path, **kw):
+    from functools import partial
+
+    from dbt_scd2_utils_spark.operators.scd2_salted import (
+        scd2_incremental_adaptive,
+    )
+
+    routes: list = []
+    probe = _MergeProbe(
+        spark, partial(scd2_incremental_adaptive, route_log=routes, **kw)
+    )
+    t = ScdTable(spark, path, CFG, partition_buckets=4, merge_fn=probe)
+    t.build(spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA))
+    return t, probe, routes
+
+
+def test_manifest_bound_merge_submits_no_jobs(spark, tmp_path):
+    """With the manifest's row counts known, the adaptive merge settles
+    both the hot-key route and the broadcast from the bound: the
+    ``merge_fn`` call inside ``build`` is plan construction only, and the
+    table equals the unbucketed build."""
+    t, probe, routes = _probed_table(spark, str(tmp_path / "bound"))
+    b2 = spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA)
+    out = t.build(b2)
+    assert probe.jobs() == []
+    assert routes == [("plain", 0)]
+    assert probe.broadcasts == [True]
+    # The bound is exact here: the affected buckets' rows plus the batch.
+    m0 = json.load(open(t._snapshot_manifest_path(0)))
+    slice_rows = sum(m0["buckets"][b]["rows"] for b in _touched(t, b2))
+    assert probe.bounds == [slice_rows + b2.count()]
+    _assert_same(out, _expected(spark, str(tmp_path / "p"),
+                                [CUSTOMERS_RAW[1], CUSTOMERS_RAW[2]]))
+
+
+def _assert_probed_fallback(spark, tmp_path, t, probe):
+    out = t.build(spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA))
+    assert probe.bounds == [None]
+    assert probe.jobs(), "without a bound the merge must run its probes"
+    _assert_same(out, _expected(spark, str(tmp_path / "p"),
+                                [CUSTOMERS_RAW[1], CUSTOMERS_RAW[2]]))
+
+
+def test_manifest_bound_unknown_rows_falls_back_to_probes(spark, tmp_path):
+    """A ``rows: -1`` entry (footer count unknown) gives no bound."""
+    t, probe, routes = _probed_table(spark, str(tmp_path / "unknown"))
+    mp = t._manifest_path()
+    m = json.load(open(mp))
+    for e in m["buckets"].values():
+        e["rows"] = -1
+    json.dump(m, open(mp, "w"))
+    _assert_probed_fallback(spark, tmp_path, t, probe)
+    assert routes == [("plain", 0)]
+
+
+def test_manifest_bound_stale_manifest_falls_back_to_probes(spark, tmp_path):
+    """A stale manifest's row counts describe files that are gone: the
+    relisted slice merges through the probes."""
+    t, probe, routes = _probed_table(spark, str(tmp_path / "stale"))
+    mp = t._manifest_path()
+    m = json.load(open(mp))
+    for b, e in m["buckets"].items():
+        e["paths"] = [f"{BUCKET_COL}={b}/part-gone-from-a-crash.parquet"]
+    json.dump(m, open(mp, "w"))
+    _assert_probed_fallback(spark, tmp_path, t, probe)
+    assert routes == [("plain", 0)]
+
+
+def test_manifest_bound_at_threshold_still_detects_hot_keys(spark, tmp_path):
+    """A bound at or above the threshold proves nothing: detection runs and
+    a key over the threshold still routes salted."""
+    t, probe, routes = _probed_table(
+        spark, str(tmp_path / "hot"), salts=4, hot_key_threshold=3
+    )
+    out = t.build(spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA))
+    assert probe.bounds[0] is not None and probe.bounds[0] >= 3
+    assert probe.jobs()
+    assert [r for r, _ in routes] == ["salted"]
+    _assert_same(out, _expected(spark, str(tmp_path / "p"),
+                                [CUSTOMERS_RAW[1], CUSTOMERS_RAW[2]]))
+
+
+def test_manifest_bound_loses_to_explicit_broadcast_false(spark, tmp_path):
+    """An explicit ``broadcast_source=False`` wins over the bound: the merge
+    source carries no broadcast hint."""
+    t, probe, routes = _probed_table(
+        spark, str(tmp_path / "nobc"), broadcast_source=False
+    )
+    out = t.build(spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA))
+    assert probe.bounds[0] is not None and routes == [("plain", 0)]
+    assert probe.broadcasts == [False]
+    _assert_same(out, _expected(spark, str(tmp_path / "p"),
+                                [CUSTOMERS_RAW[1], CUSTOMERS_RAW[2]]))
+
+
 # ---- restore (RESTORE TABLE ... VERSION AS OF in miniature) ---------------
 
 

@@ -162,3 +162,13 @@ def test_release_entry_caches_frees_query_layer(spark):
     assert em._MERGE_TARGET_CACHE == {} and em._INDEX_CACHE == {}
     # idempotent on an empty registry
     assert em.release_entry_caches() == 0
+
+
+def test_get_spark_disables_dataframe_debugging(spark):
+    """get_spark turns off PySpark's per-call call-site capture (see its
+    docstring for the trade-off); the wrapper reads the flag once per
+    process, so the session must carry it from creation."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()

@@ -61,6 +61,11 @@ SLOW_QUERIES = {
     "semantic_dedup",
     "bpe_learn_merges_100",
 }
+# Drift check: a renamed or removed query must not leave a stale entry
+# that silently marks nothing slow.
+assert SLOW_QUERIES <= set(entry_mod.queries()), (
+    SLOW_QUERIES - set(entry_mod.queries())
+)
 
 QUERY_NAMES = [
     pytest.param(n, marks=pytest.mark.slow) if n in SLOW_QUERIES else n

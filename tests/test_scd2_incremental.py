@@ -209,6 +209,42 @@ def test_broadcast_fallback_on_large_source(spark):
     )
 
 
+def test_row_bound_decides_broadcast_only_when_within_budget(spark):
+    """A ``_scd_row_bound`` on the target (a bucketed ScdTable attaches
+    target-slice + batch rows) within ``broadcast_max_rows`` broadcasts the
+    source without counting it — no job runs while the merge is planned.
+    A bound over the budget proves nothing, and the count decides."""
+    cfg = ScdConfig(unique_key=("customer_id",), deleted_at_column="deleted_at")
+    b1 = spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA)
+    b2 = spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA)
+    target = scd2_initial_load(b1, cfg).persist()
+    n = target.count() + b2.count()
+    sc = spark.sparkContext
+    forced = scd2_incremental(target, b2, cfg, broadcast_source=True)
+    for max_rows, counts in ((n, False), (n - 1, True)):
+        bounded = target.select("*")
+        bounded._scd_row_bound = n
+        group = f"row-bound-{max_rows}"
+        sc.setJobGroup(group, "merge")
+        try:
+            out = scd2_incremental(bounded, b2, cfg, broadcast_max_rows=max_rows)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        counted = bool(sc.statusTracker().getJobIdsForGroup(group))
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        hinted = [
+            "rightHint=(strategy=broadcast)" in line
+            for line in plan.splitlines() if "Join LeftOuter" in line
+        ]
+        assert counted is counts
+        # The source is far below n - 1 rows, so the count broadcasts too.
+        assert hinted == [True]
+        assert out.exceptAll(forced).count() == 0
+        assert forced.exceptAll(out).count() == 0
+
+
 def test_incremental_predicates_mirror_merge_on_semantics(spark):
     """incremental_predicates AND into the MERGE ON clause
     (get_incremental_scd2_sql.sql:247-255): a predicate-excluded target row
