@@ -215,6 +215,20 @@ from events
 
 _STREAM_BUILDERS: dict = {}
 
+# Every directory a session memo stages into (the streaming stages, the
+# staged merge targets, the bucketed gate tables, the DSIR ratio artifact):
+# release_entry_caches() removes them with the memos that point at them.
+_STAGED_DIRS: list[str] = []
+
+
+def _staging_dir(prefix: str) -> str:
+    """A fresh temp dir for a session memo, recorded for release."""
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    _STAGED_DIRS.append(d)
+    return d
+
 
 def _stream_builder(name: str):
     """Register a staging builder under ``name`` (see _stream_stage)."""
@@ -242,9 +256,7 @@ def _stream_stage(spark: SparkSession, sf_dir: str, name: str) -> str:
     key = (spark, sf_dir, "stream_stage", name)
     base = _INDEX_CACHE.get(key)
     if base is None:
-        import tempfile
-
-        base = tempfile.mkdtemp(prefix=f"scd_stream_{name}_")
+        base = _staging_dir(f"scd_stream_{name}_")
         _STREAM_BUILDERS[name](spark, sf_dir, base)
         _INDEX_CACHE[key] = base
     return base
@@ -449,8 +461,6 @@ def _staged_target(
     key = (spark, sf_dir, variant)
     tgt = _MERGE_TARGET_CACHE.get(key)
     if tgt is None:
-        import tempfile
-
         b1, _ = _split(change_feed(spark, sf_dir))
         # Materialize to parquet and read back (not persist()): a stored
         # table is a LEAF scan, so every consuming merge plans against a
@@ -461,7 +471,7 @@ def _staged_target(
         # (guide §3.3/§7.3), and target-slice filters now push down to the
         # scan.  This is also what a real incremental run reads: the
         # persisted output of the previous run.
-        base = tempfile.mkdtemp(prefix=f"scd_target_{variant}_")
+        base = _staging_dir(f"scd_target_{variant}_")
         scd2_initial_load(b1, cfg).coalesce(8).write.parquet(f"{base}/t")
         tgt = spark.read.parquet(f"{base}/t")
         _MERGE_TARGET_CACHE[key] = tgt
@@ -633,9 +643,13 @@ def release_entry_caches() -> int:
     """Free EVERY cache the query layer holds: the per-query barriers
     (functions/caching.release_caches) plus the session memo caches
     (_MERGE_TARGET_CACHE, _INDEX_CACHE — the build-once index/target
-    artifacts).  After this a long-lived driver session is back to zero
-    executor storage; the next query call simply rebuilds its memos.
-    Returns how many cached relations were released."""
+    artifacts) and the staging directories the memos wrote
+    (``_staging_dir``).  After this a long-lived Spark session is back to
+    zero executor storage and zero staged directories; the next query call
+    simply rebuilds its memos.  Returns how many cached relations were
+    released."""
+    import shutil
+
     from .functions.caching import release_caches
 
     n = release_caches()
@@ -650,6 +664,9 @@ def release_entry_caches() -> int:
             except Exception:
                 pass  # session already stopped
         memo.clear()
+    for d in _STAGED_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+    _STAGED_DIRS.clear()
     return n
 
 
@@ -1183,14 +1200,12 @@ def _bucketed_scd_table(spark: SparkSession, sf_dir: str, variant: str):
     variant) — repeated gate runs reuse it instead of accumulating /tmp
     dirs, and the memo mirrors ``_staged_target``: a real deployment's
     table already EXISTS; staging it was previous runs' cost."""
-    import tempfile
-
     from .plans.build import ScdTable
 
     key = (spark, sf_dir, "scd_table", variant)
     t = _INDEX_CACHE.get(key)
     if t is None:
-        base = tempfile.mkdtemp(prefix=f"scd_gate_{variant}_")
+        base = _staging_dir(f"scd_gate_{variant}_")
         # The restore gate re-restores generation 0 on EVERY invocation
         # (each one a new commit), so its table needs gen 0 retained far
         # past the default window for repeated gate/bench runs.
@@ -2215,8 +2230,6 @@ def q_dsir_score_loaded(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end — a deployment can train on one cluster, ship the ≤4096-row
     artifact, and gate anywhere."""
     prepare(spark)
-    import tempfile
-
     from .operators.dsir import dsir_ratio, dsir_score, load_dsir_ratio, save_dsir_ratio
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2228,7 +2241,7 @@ def q_dsir_score_loaded(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _INDEX_CACHE.get(key)
     if path is None:
         ratio = dsir_ratio(docs, docs.filter(F.col("lang") == "en"))
-        path = tempfile.mkdtemp(prefix="scd_dsir_ratio_") + "/ratio"
+        path = _staging_dir("scd_dsir_ratio_") + "/ratio"
         save_dsir_ratio(ratio, path)
         _INDEX_CACHE[key] = path
     loaded = load_dsir_ratio(spark, path)

@@ -55,8 +55,35 @@ class ConcurrentWriteError(RuntimeError):
     gate keeps the retry exactly-once)."""
 
 
+MANIFEST = "_scd_manifest.json"
+META = "_scd_meta.json"
+
+
 def _gen_dirname(gen: int) -> str:
     return f"{GEN_PREFIX}{gen:08d}"
+
+
+def _gen_of(name: str) -> int | None:
+    """Generation number of a ``_gen-<G>`` directory name, else None."""
+    if name.startswith(GEN_PREFIX):
+        try:
+            return int(name[len(GEN_PREFIX):])
+        except ValueError:
+            pass
+    return None
+
+
+def _snapshot_name(gen: int) -> str:
+    return f"_scd_manifest.{gen:08d}.json"
+
+
+def _dump_json(path: str, obj) -> None:
+    """Write a JSON file atomically (tmp + ``os.replace``): a reader sees
+    the old content or the new one, never a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def _release_intermediates(result: DataFrame) -> None:
@@ -77,15 +104,21 @@ class ScdTable:
     """An SCD-materialized table over a parquet directory.
 
     At cluster scale the same orchestration targets a catalog table
-    (``saveAsTable``) or Delta; the parquet-directory sink keeps round-1
-    dependency-free while preserving atomicity (tmp write + rename swap).
+    (``saveAsTable``) or Delta; the parquet-directory sink stays
+    dependency-free.  Initial builds and full refreshes replace the whole
+    table directory atomically (``_atomic_write``: tmp write + rename).
 
     ``partition_buckets=N`` is the 100-TB write path: the table is
     partitioned by a stable hash bucket of the business key, and an
     incremental run merges + rewrites ONLY the bucket partitions the batch's
-    keys touch (dynamic partition overwrite) — write amplification drops
-    from O(table) to O(affected buckets), and the unaffected partitions are
-    never read either (partition pruning on the bucket filter).
+    keys touch — write amplification drops from O(table) to O(affected
+    buckets), and the unaffected partitions are never read either.  Every
+    write to a bucketed table after its creation (merge, ``delete_keys``,
+    ``rebucket``, ``restore``) is one generational commit through
+    ``_open_manifest`` + ``_transact``: the rewritten buckets land in a new
+    immutable ``_gen-<G>/`` directory and the commit atomically replaces
+    the manifest under optimistic concurrency (see the manifest note
+    below).
     """
 
     def __init__(
@@ -187,7 +220,7 @@ class ScdTable:
         return os.path.exists(os.path.join(self.path, "_SUCCESS"))
 
     def _meta_path(self) -> str:
-        return os.path.join(self.path, "_scd_meta.json")
+        return os.path.join(self.path, META)
 
     # -- partition manifest ----------------------------------------------
     #
@@ -242,7 +275,7 @@ class ScdTable:
     # wholesale, same as the reference's table materialization.
 
     def _manifest_path(self) -> str:
-        return os.path.join(self.path, "_scd_manifest.json")
+        return os.path.join(self.path, MANIFEST)
 
     def _snapshot_manifest_path(self, gen: int) -> str:
         """Per-generation manifest snapshot (`_scd_manifest.<gen>.json`) —
@@ -250,30 +283,39 @@ class ScdTable:
         (``read(at_gen=...)``) to any generation still inside the vacuum
         retention window.  Same lifecycle as the data files: kept for
         gens in [current - retain_generations, current], removed after."""
-        return os.path.join(self.path, f"_scd_manifest.{gen:08d}.json")
+        return os.path.join(self.path, _snapshot_name(gen))
+
+    def _snapshots(self) -> list[tuple[int, str]]:
+        """(gen, path) of every ``_scd_manifest.<gen>.json`` snapshot file
+        in the table dir — one listing."""
+        try:
+            names = os.listdir(self.path)
+        except OSError:
+            return []
+        head, tail = "_scd_manifest.", ".json"
+        return [
+            (int(n[len(head):-len(tail)]), os.path.join(self.path, n))
+            for n in names
+            if n.startswith(head)
+            and n.endswith(tail)
+            and n[len(head):-len(tail)].isdigit()
+        ]
+
+    def _expire_snapshots(self, oldest: int) -> None:
+        """Remove the snapshots of generations below ``oldest``: their
+        referenced files are (or are about to be) vacuumed, so serving them
+        would be a lie.  O(retained snapshots), tiny files."""
+        for g, p in self._snapshots():
+            if g < oldest:
+                try:
+                    os.remove(p)
+                except OSError:
+                    pass
 
     def _write_snapshot_manifest(self, manifest: dict) -> None:
         gen = manifest.get("gen", 0)
-        tmp = self._snapshot_manifest_path(gen) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._snapshot_manifest_path(gen))
-        # Expire snapshots whose generation fell out of retention — their
-        # referenced files are (or are about to be) vacuumed, so serving
-        # them would be a lie.  O(retained snapshots), tiny files.
-        for name in os.listdir(self.path):
-            if not (
-                name.startswith("_scd_manifest.") and name.endswith(".json")
-            ):
-                continue
-            stem = name[len("_scd_manifest."):-len(".json")]
-            if not stem.isdigit():
-                continue
-            if int(stem) < gen - self._retain(manifest):
-                try:
-                    os.remove(os.path.join(self.path, name))
-                except OSError:
-                    pass
+        _dump_json(self._snapshot_manifest_path(gen), manifest)
+        self._expire_snapshots(gen - self._retain(manifest))
 
     def _retained_manifests(self) -> dict[int, dict]:
         """gen -> manifest for every RETAINED generation: the per-gen
@@ -284,20 +326,9 @@ class ScdTable:
         serve — ``history()`` and ``read_at_timestamp()`` both resolve
         through it."""
         out: dict[int, dict] = {}
-        try:
-            names = os.listdir(self.path)
-        except OSError:
-            names = []
-        for name in names:
-            if not (
-                name.startswith("_scd_manifest.") and name.endswith(".json")
-            ):
-                continue
-            stem = name[len("_scd_manifest."):-len(".json")]
-            if not stem.isdigit():
-                continue
+        for _g, p in self._snapshots():
             try:
-                with open(os.path.join(self.path, name)) as f:
+                with open(p) as f:
                     m = json.load(f)
             except (OSError, ValueError):
                 continue
@@ -408,16 +439,17 @@ class ScdTable:
     def _leaf_read(self, files: list[str], stale: bool, schema_json: str) -> DataFrame:
         """Plan a read over manifest-resolved leaf files: pin the recorded
         schema on a clean manifest, merge footers when the manifest is
-        behind disk (crash recovery — see _affected_files), empty relation
-        of the recorded schema when no files remain.  Shared by read(),
-        read_at_gen() and read_keys()."""
+        behind disk (crash recovery — see _affected_files) or records no
+        schema, empty relation of the recorded schema when no files remain.
+        The one leaf reader: every read, the merge's target slice and
+        rebucket's full read plan through it."""
         from pyspark.sql.types import StructType
 
+        if files and (stale or not schema_json):
+            return self.spark.read.option("mergeSchema", "true").parquet(*files)
         schema = StructType.fromJson(json.loads(schema_json))
         if not files:
             return self.spark.createDataFrame([], schema)
-        if stale:
-            return self.spark.read.option("mergeSchema", "true").parquet(*files)
         return self.spark.read.schema(schema).parquet(*files)
 
     def read_keys(self, keys: DataFrame) -> DataFrame:
@@ -546,10 +578,7 @@ class ScdTable:
             return None
 
     def _write_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
+        _dump_json(self._manifest_path(), manifest)
 
     @staticmethod
     def _scan_bucket_dir(part_dir: str) -> dict | None:
@@ -626,14 +655,9 @@ class ScdTable:
         # would silently invert newest-wins precedence the day a counter
         # outgrows the zero-padding width, resurrecting superseded rows
         # during manifest-loss recovery.
-        gen_dirs: list[tuple[int, str]] = []
-        for n in os.listdir(base):
-            if not n.startswith(GEN_PREFIX):
-                continue
-            try:
-                gen_dirs.append((int(n[len(GEN_PREFIX):]), n))
-            except ValueError:
-                continue
+        gen_dirs = [
+            (g, n) for n in os.listdir(base) if (g := _gen_of(n)) is not None
+        ]
         top = 0
         for g, gd in sorted(gen_dirs):
             if not os.path.exists(os.path.join(base, gd, "_SUCCESS")):
@@ -710,9 +734,13 @@ class ScdTable:
         except OSError:
             return
         for name in names:
+            p = os.path.join(self.path, name)
+            if name.startswith(f".{BUCKET_COL}=") and name.endswith("__old"):
+                # Parked-partition remnant of the OLD swap protocol's
+                # crashes (dot-prefixed, invisible to Spark): legacy only.
+                shutil.rmtree(p, ignore_errors=True)
             if not name.startswith(STAGE_PREFIX):
                 continue
-            p = os.path.join(self.path, name)
             newest = 0.0
             for root, _dirs, fnames in os.walk(p):
                 for f in [root] + [os.path.join(root, n) for n in fnames]:
@@ -860,30 +888,204 @@ class ScdTable:
 
         return os.path.join(self.path, f"{STAGE_PREFIX}{uuid.uuid4().hex}")
 
-    def _commit_and_vacuum(
+    def _recover(self) -> tuple[dict, DataFrame | None]:
+        """Manifest-loss recovery: rebuild the manifest from disk (newest
+        generation wins per bucket — see ``_scan_full_manifest``) and plan
+        a footer-merged read of the files it adopts (None when there are
+        none): the schema's record went with the manifest."""
+        recon = self._scan_full_manifest("")
+        files = [
+            os.path.join(self.path, r)
+            for e in recon["buckets"].values()
+            for r in e["paths"]
+        ]
+        return recon, (self._leaf_read(files, True, None) if files else None)
+
+    def _open_manifest(self, manifest: dict | None = None) -> dict | None:
+        """Step one of every generational write: the committed manifest
+        (``manifest`` if the caller already read it), upgraded to the
+        generational form, with the pre-commit housekeeping done.
+
+        - Sweeps abandoned stages and the old swap protocol's ``__old``
+          remnants (one listing).
+        - A manifest-less table holding data is migrated once (the same
+          full listing the old path paid every merge); the schema is merged
+          from the adopted files' footers.  None means no data at all.
+        - A legacy manifest is normalized in memory; the commit persists it.
+        - Orphan generations above the live one are swept, and the current
+          generation's snapshot is backfilled if missing (legacy table,
+          pre-snapshot table, or a crash between a commit and its snapshot
+          write): the state the commit displaces must stay
+          time-travel-readable for the full retention window."""
+        self._sweep_stale_stages()
+        if manifest is None:
+            manifest = self._read_manifest()
+        if manifest is None and any(
+            n.startswith((f"{BUCKET_COL}=", GEN_PREFIX))
+            for n in os.listdir(self.path)
+        ):
+            manifest, adopted = self._recover()
+            if adopted is None:
+                return None
+            manifest["schema"] = adopted.schema.json()
+        elif manifest is not None and "gen" not in manifest:
+            manifest = self._normalize_manifest(manifest)
+        if manifest is not None:
+            manifest.setdefault("superseded", {})
+            self._sweep_orphan_generations()
+            if manifest.get("schema") and not os.path.exists(
+                self._snapshot_manifest_path(manifest.get("gen", 0))
+            ):
+                self._write_snapshot_manifest(manifest)
+        return manifest
+
+    def _stamp(
         self,
-        stage_dir: str,
-        gen_dir: str,
-        base_gen: int | None,
         manifest: dict,
-        gen: int,
+        op: str,
+        bucket_count: int | None = None,
+        txn: dict | None = None,
+        prior: dict | None = None,
     ) -> None:
-        """The shared commit choreography for merge and rebucket:
-        transaction (conflict check / claim / publish), provenance meta,
-        then the deferred vacuum — whose ledger shrink is persisted on
-        CONTENT change (a partial vacuum failure re-adds a key with fewer
-        paths, same key count) and only if this commit is still the
-        latest.  Phase-timed into ``last_phase_times``."""
+        """Stamp a commit's fields onto ``manifest``.  The TABLE properties
+        carry over from ``prior`` (default: ``manifest`` itself): the
+        effective retention is recorded (an explicit constructor value
+        updates it; default writers inherit it), so no later writer can
+        vacuum underneath a reader that opened the table under a longer
+        window, and the per-app ``txn`` epoch map is carried forward with
+        ``txn``'s pairs merged in — recorded atomically WITH the data
+        pointer (Delta txnAppId/txnVersion; see ``build()``'s exactly-once
+        note).  ``bucket_count`` defaults to this handle's."""
+        prior = manifest if prior is None else prior
+        manifest["retain"] = self._retain(prior)
+        manifest["bucket_count"] = bucket_count or self.partition_buckets
+        manifest["op"] = op
+        manifest["committed_at"] = time.time()
+        txns = {**(prior.get("txn") or {}), **(txn or {})}
+        if txns:
+            manifest["txn"] = txns
+
+    def _transact(
+        self,
+        op: str,
+        manifest: dict | None,
+        t0: float,
+        frame=None,
+        buckets=(),
+        displaced=(),
+        bucket_count: int | None = None,
+        txn: dict | None = None,
+    ) -> None:
+        """Step two of every generational write: one optimistic transaction
+        (Delta's ``OptimisticTransaction`` in miniature).  The operation
+        supplies only its bucket rewrite:
+
+        - ``frame()`` plans the rows to write (called inside the timed
+          stage phase; its merge intermediates are released whether the
+          commit succeeds or aborts), staged under ``bucket_count``'s
+          mapping (default: this handle's) as one file per bucket;
+          ``frame=None`` stages nothing (a metadata-only commit);
+        - ``buckets``: the bucket ids the stage rewrites — each entry is
+          replaced by its staged files, or dropped if none were staged;
+        - ``displaced``: data files (absolute) the commit stops
+          referencing, put on the superseded ledger for deferred vacuum.
+
+        Claims generation ``gen + 1`` of ``manifest`` (gen 1 of a fresh
+        table when ``manifest`` is None), stages into a writer-private dir,
+        commits under ``_commit_transaction``'s OCC (a rival's commit makes
+        this one raise ``ConcurrentWriteError`` with nothing visible),
+        writes the provenance meta, then vacuums — persisting the shrunk
+        ledger only on CONTENT change (a partial vacuum failure re-adds a
+        key with fewer paths) and only if this commit is still the latest.
+        ``t0`` is when the operation began planning: ``last_phase_times``
+        gets ``list_affected`` (planning), ``merge_and_stage``,
+        ``swap_and_commit`` and ``vacuum``.
+
+        Durability: the rows are planned over the live table, so they must
+        be fully on disk before the commit makes them visible — the staged
+        write IS that durable barrier, and claiming the generation number
+        only at commit time (rename onto ``_gen-<G>``) means concurrent
+        writers never scribble into one directory.  A crash before the
+        rename leaves an invisible stage dir (TTL-swept); between rename
+        and manifest replace, an invisible orphan generation the next
+        commit sweeps; after the replace, a completed commit.  Readers
+        planned against the previous manifest keep their files for
+        ``retain_generations`` further commits before vacuum.  On an object
+        store this is exactly a table-format commit (Delta/Iceberg):
+        immutable data files + a conditional pointer write."""
+        self.last_phase_times = {"list_affected": time.perf_counter() - t0}
         t0 = time.perf_counter()
-        self._commit_transaction(stage_dir, gen_dir, base_gen, manifest)
-        self._write_meta()
-        self.last_phase_times["swap_and_commit"] = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        ledger_before = json.dumps(manifest["superseded"], sort_keys=True)
-        self._vacuum(manifest, gen)
-        if json.dumps(manifest["superseded"], sort_keys=True) != ledger_before:
-            self._persist_ledger_if_unchanged(manifest, gen)
-        self.last_phase_times["vacuum"] = time.perf_counter() - t0
+        base_gen = manifest.get("gen") if manifest is not None else None
+        manifest = manifest or {"gen": 0, "buckets": {}, "superseded": {}}
+        gen = manifest.get("gen", 0) + 1
+        gen_rel = _gen_dirname(gen)
+        stage_dir = self._new_stage_dir()
+        result = frame() if frame is not None else None
+        try:
+            if result is None:
+                os.makedirs(stage_dir)
+            else:
+                (
+                    result.withColumn(
+                        BUCKET_COL, self._bucket_expr(result, bucket_count)
+                    )
+                    # One file per rewritten bucket (not one per shuffle task
+                    # per bucket): without this co-location the generation
+                    # dirs inherit the task fan-out and the table's file
+                    # count grows ∝ writes × buckets — every later merge then
+                    # pays a listing of all of them (measured: the s40
+                    # bucketed merge cost grew WITH the table until this fix).
+                    .repartition(len(buckets), F.col(BUCKET_COL))
+                    .write.mode("overwrite")
+                    .partitionBy(BUCKET_COL)
+                    .parquet(stage_dir)
+                )
+                manifest["schema"] = result.schema.json()
+            self.last_phase_times["merge_and_stage"] = time.perf_counter() - t0
+            # The generation is durable and invisible: patch the rewritten
+            # buckets' entries (O(rewritten) scanning, not O(table)).
+            for b in buckets:
+                entry = self._scan_bucket_dir(
+                    os.path.join(stage_dir, f"{BUCKET_COL}={b}")
+                )
+                if entry is None:
+                    manifest["buckets"].pop(str(b), None)
+                else:
+                    manifest["buckets"][str(b)] = {
+                        "paths": [
+                            f"{gen_rel}/{BUCKET_COL}={b}/{n}"
+                            for n in entry["files"]
+                        ],
+                        "rows": entry["rows"],
+                    }
+            if displaced:
+                manifest["superseded"][str(gen)] = [
+                    os.path.relpath(p, self.path) for p in displaced
+                ]
+            manifest["gen"] = gen
+            self._stamp(manifest, op, bucket_count, txn)
+            t0 = time.perf_counter()
+            self._commit_transaction(
+                stage_dir, os.path.join(self.path, gen_rel), base_gen, manifest
+            )
+            self._write_meta()
+            self.last_phase_times["swap_and_commit"] = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            ledger_before = json.dumps(manifest["superseded"], sort_keys=True)
+            self._vacuum(manifest, gen)
+            if json.dumps(manifest["superseded"], sort_keys=True) != ledger_before:
+                self._persist_ledger_if_unchanged(manifest, gen)
+            self.last_phase_times["vacuum"] = time.perf_counter() - t0
+        finally:
+            # Release the merge's persisted intermediates whether the commit
+            # SUCCEEDED (their plans hold leaf files now on the superseded
+            # ledger — refreshByPath re-caching them would pin listings
+            # vacuum deletes later) or ABORTED (the advertised
+            # ConcurrentWriteError retry must not leak one dead cache pair
+            # per conflicted attempt).
+            if result is not None:
+                _release_intermediates(result)
+        self.spark.catalog.refreshByPath(self.path)
 
     def _sweep_orphan_generations(self) -> None:
         """Remove `_gen-*` dirs newer than the LIVE committed generation —
@@ -907,15 +1109,9 @@ class ScdTable:
             live = self._read_manifest()
             if live is None or not isinstance(live.get("gen"), int):
                 return  # no committed baseline to judge orphans against
-            committed_gen = live["gen"]
             for name in os.listdir(self.path):
-                if not name.startswith(GEN_PREFIX):
-                    continue
-                try:
-                    g = int(name[len(GEN_PREFIX):])
-                except ValueError:
-                    continue
-                if g > committed_gen:
+                g = _gen_of(name)
+                if g is not None and g > live["gen"]:
                     shutil.rmtree(
                         os.path.join(self.path, name), ignore_errors=True
                     )
@@ -971,13 +1167,8 @@ class ScdTable:
         except OSError:
             names = []
         for name in names:
-            if not name.startswith(GEN_PREFIX):
-                continue
-            try:
-                g = int(name[len(GEN_PREFIX):])
-            except ValueError:
-                continue
-            if g <= gen - eff:
+            g = _gen_of(name)
+            if g is not None and g <= gen - eff:
                 self._prune_dir(os.path.join(self.path, name))
         return removed
 
@@ -1081,21 +1272,16 @@ class ScdTable:
             total += rows
         return total
 
-    def _write_meta(self) -> None:
+    def _write_meta(self, root: str | None = None) -> None:
         """Record how this relation was built so the next run can apply the
         reference's materialization-match rule (is_incremental.sql:18-28:
         a relation last built by a DIFFERENT materialization forces a full
-        rebuild rather than an incremental merge)."""
-        import json
-
-        with open(self._meta_path(), "w") as f:
-            json.dump(
-                {
-                    "materialized": self.MATERIALIZATION,
-                    "scd_type": self.cfg.scd_type,
-                },
-                f,
-            )
+        rebuild rather than an incremental merge).  ``root`` defaults to
+        the table dir; ``_atomic_write`` passes its staging dir."""
+        _dump_json(
+            os.path.join(root or self.path, META),
+            {"materialized": self.MATERIALIZATION, "scd_type": self.cfg.scd_type},
+        )
 
     def _materialization_matches(self) -> bool:
         """is_incremental.sql:18-28's materialization-match leg.  A missing
@@ -1110,8 +1296,6 @@ class ScdTable:
         dbt replacing a ``table`` relation when the model switches to
         ``scd``.  ``_write_meta`` runs on every build, so unknown-provenance
         tables are backfilled after one incremental cycle."""
-        import json
-
         try:
             with open(self._meta_path()) as f:
                 meta = json.load(f)
@@ -1139,15 +1323,10 @@ class ScdTable:
                 # Manifest-less GENERATIONAL table (manifest deleted out of
                 # band): Spark's recursive discovery skips the
                 # underscore-prefixed generation dirs, so reconstruct the
-                # file set the way the merge-path migration does (newest
-                # generation wins per bucket).
-                recon = self._scan_full_manifest("")
-                paths = [
-                    os.path.join(self.path, r)
-                    for e in recon["buckets"].values()
-                    for r in e["paths"]
-                ]
-                return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+                # file set the way _open_manifest migrates such a table.
+                adopted = self._recover()[1]
+                if adopted is not None:
+                    return adopted
             # Pre-manifest legacy table: recursive discovery (one-time; the
             # next build writes the manifest).
             return self.spark.read.parquet(self.path).drop(BUCKET_COL)
@@ -1292,32 +1471,9 @@ class ScdTable:
     ) -> None:
         """Merge only the buckets the batch touches, rewrite only those
         buckets — into a NEW immutable generation directory, committed by
-        atomically replacing the manifest (see the snapshot-isolation note
-        on the manifest above).
-
-        Durability: the merge plan reads the live table, so its output must
-        be fully on disk before the commit makes it visible — the staged
-        write IS that durable barrier.  Each writer stages into a PRIVATE
-        ``_stage-<uuid>/`` dir and claims the generation number only at
-        commit time (``_commit_transaction``: manifest-generation check +
-        rename onto ``_gen-<G>`` — optimistic concurrency; a concurrent
-        committer makes this writer raise ``ConcurrentWriteError`` with
-        nothing visible, never a lost update).  A crash before the rename
-        leaves an invisible stage dir (TTL-swept); between rename and
-        manifest replace, an invisible orphan generation the next merge
-        sweeps; after the replace, a completed commit.  Readers planned
-        against the previous manifest keep their files for
-        ``retain_generations`` further commits before vacuum.  On an object
-        store this is exactly a table-format commit (Delta/Iceberg):
-        immutable data files + a conditional pointer write.
-        """
-        # Sweep parked-partition remnants from the OLD swap protocol's
-        # crashes (dot-prefixed, invisible to Spark) — legacy tables only.
-        import glob
-
-        for leftover in glob.glob(os.path.join(self.path, f".{BUCKET_COL}=*__old")):
-            shutil.rmtree(leftover, ignore_errors=True)
-        self._sweep_stale_stages()
+        ``_transact`` (see its durability note and the snapshot-isolation
+        note on the manifest above).  ``merge_fn``/``op`` let
+        ``delete_keys`` reuse the path with an anti-join."""
         # One action lists the affected buckets AND counts the batch — the
         # batch half of the merge's row bound (see _slice_row_bound).
         bucket_rows = batch.groupBy(self._bucket_expr(batch).alias("b")).count().collect()
@@ -1325,9 +1481,9 @@ class ScdTable:
         if not affected:
             # Empty incremental batch (a realistic CDC input): no bucket is
             # touched, so the merge is a no-op — and `.repartition(0, ...)`
-            # below would raise.  Keep provenance current and leave the
-            # table untouched, same net effect as the vanilla path merging
-            # an empty batch.
+            # in the stage write would raise.  Keep provenance current and
+            # leave the table untouched, same net effect as the vanilla
+            # path merging an empty batch.
             self._write_meta()
             return
         # Resolve the target slice through the manifest: O(affected-bucket)
@@ -1335,66 +1491,11 @@ class ScdTable:
         # leaf files directly (no partition discovery) also skips footer
         # schema merging — the manifest carries the data schema.
         t0 = time.perf_counter()
-        if manifest is None:
-            manifest = self._read_manifest()
-        if manifest is None and any(
-            n.startswith((f"{BUCKET_COL}=", GEN_PREFIX))
-            for n in os.listdir(self.path)
-        ):
-            # Manifest-less table: one-time migration listing (same cost the
-            # old full-listing path paid EVERY merge).  Newest generation
-            # wins per bucket (at-least-once commit adoption — see
-            # _scan_full_manifest); the schema is merged from the adopted
-            # files' footers since the manifest's record is gone.
-            manifest = self._scan_full_manifest("")
-            all_files = [
-                os.path.join(self.path, r)
-                for e in manifest["buckets"].values()
-                for r in e["paths"]
-            ]
-            if all_files:
-                manifest["schema"] = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(*all_files)
-                    .schema.json()
-                )
-            else:
-                manifest = None
-        elif manifest is not None and "gen" not in manifest:
-            manifest = self._normalize_manifest(manifest)
-        if manifest is not None:
-            manifest.setdefault("superseded", {})
-            self._sweep_orphan_generations()
-            # Backfill the PRE-merge generation's snapshot if it is missing
-            # (legacy table normalized in place, pre-snapshot-era table, or
-            # a crash between a commit and its snapshot write): the state
-            # this merge displaces must stay time-travel-readable for the
-            # full retention window.
-            base_gen = manifest.get("gen", 0)
-            if manifest.get("schema") and not os.path.exists(
-                self._snapshot_manifest_path(base_gen)
-            ):
-                self._write_snapshot_manifest(manifest)
+        manifest = self._open_manifest(manifest)
         files, stale = self._affected_files(manifest, affected)
         schema_json = (manifest or {}).get("schema")
-        from pyspark.sql.types import StructType
-
-        data_schema = (
-            StructType.fromJson(json.loads(schema_json)) if schema_json else None
-        )
-        if files:
-            reader = self.spark.read
-            if data_schema is not None and not stale:
-                reader = reader.schema(data_schema)
-            elif stale:
-                # Crash-recovery path: the relisted files may be newer than
-                # the manifest's recorded schema — derive it from footers.
-                reader = reader.option("mergeSchema", "true")
-            target_slice = reader.parquet(*files)
-        elif data_schema is not None:
-            # All affected buckets are brand new — merge against an empty
-            # target slice of the recorded schema.
-            target_slice = self.spark.createDataFrame([], data_schema)
+        if files or schema_json:
+            target_slice = self._leaf_read(files, stale, schema_json)
         else:
             # No files AND no recorded schema (legacy empty table): derive
             # the SCD output schema from the batch itself.
@@ -1405,90 +1506,17 @@ class ScdTable:
             # result: the stock merges read it to skip their probe jobs,
             # any other merge_fn ignores it.
             target_slice._scd_row_bound = slice_rows + sum(r[1] for r in bucket_rows)
-        self.last_phase_times = {"list_affected": time.perf_counter() - t0}
-        t0 = time.perf_counter()
-        merged = (merge_fn or self.merge_fn)(target_slice, batch, self.cfg)
-        # base_gen: the committed generation this merge planned against —
-        # None only when no committed new-style manifest existed (fresh
-        # migration), where the rename below is the sole (sufficient) gate.
-        base_gen = manifest.get("gen") if manifest is not None else None
-        manifest = manifest or {"gen": 0, "buckets": {}, "superseded": {}}
-        gen = manifest.get("gen", 0) + 1
-        gen_rel = _gen_dirname(gen)
-        gen_dir = os.path.join(self.path, gen_rel)
-        # Stage into a writer-PRIVATE dir: two concurrent merges targeting
-        # the same next generation would otherwise scribble into one
-        # directory (mode("overwrite") deletes the other's files mid-write
-        # — silent lost update).  The generation number is claimed only at
-        # commit, by _commit_transaction's rename.
-        stage_dir = self._new_stage_dir()
-        try:
-            (
-                merged.withColumn(BUCKET_COL, self._bucket_expr(merged))
-                # One file per touched bucket partition (not one per shuffle
-                # task per partition): without this co-location the generation
-                # dirs inherit the task fan-out and the table's file count
-                # grows ∝ writes × buckets — every later merge then pays a
-                # full-listing of all of them (measured: the s40 bucketed
-                # merge cost grew WITH the table until this fix).
-                .repartition(len(affected), F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(stage_dir)
-            )
-            self.last_phase_times["merge_and_stage"] = time.perf_counter() - t0
-            # The generation is durable and invisible; COMMIT by patching the
-            # affected buckets' entries (O(batch) scanning, not O(table)) and
-            # atomically replacing the manifest.  The displaced files — the
-            # exact file set the merge's target slice read — go on the
-            # superseded ledger under this commit's gen for deferred vacuum.
-            displaced = [os.path.relpath(p, self.path) for p in files]
-            for b in affected:
-                entry = self._scan_bucket_dir(
-                    os.path.join(stage_dir, f"{BUCKET_COL}={b}")
-                )
-                if entry is None:
-                    # The merge emptied this bucket (or the batch never had
-                    # survivors for it): no files in this generation.
-                    manifest["buckets"].pop(str(b), None)
-                else:
-                    manifest["buckets"][str(b)] = {
-                        "paths": [
-                            f"{gen_rel}/{BUCKET_COL}={b}/{n}"
-                            for n in entry["files"]
-                        ],
-                        "rows": entry["rows"],
-                    }
-            if displaced:
-                manifest["superseded"][str(gen)] = displaced
-            manifest["gen"] = gen
-            manifest["schema"] = merged.schema.json()
-            # Record the effective retention as a TABLE property (an explicit
-            # constructor value updates it; default writers inherit it), so no
-            # later writer can vacuum underneath a reader that opened the
-            # table under a longer window.
-            manifest["retain"] = self._retain(manifest)
-            manifest["bucket_count"] = self.partition_buckets
-            manifest["op"] = op
-            manifest["committed_at"] = time.time()
-            if txn_epoch is not None:
-                # Recorded atomically WITH the data pointer, SCOPED per writer
-                # application (Delta txnAppId/txnVersion): replaying this epoch
-                # after any crash sees either no trace of it (orphan gen swept,
-                # re-merge) or the completed commit (skipped) — never a
-                # half-applied state — and an unrelated stream's epoch counter
-                # can never shadow this one's.  See build()'s exactly-once note.
-                manifest.setdefault("txn", {})[txn_app] = txn_epoch
-            self._commit_and_vacuum(stage_dir, gen_dir, base_gen, manifest, gen)
-        finally:
-            # Release the merge's persisted intermediates whether the commit
-            # SUCCEEDED (their plans hold leaf files now on the superseded
-            # ledger — refreshByPath re-caching them would pin listings
-            # vacuum deletes later) or ABORTED (the advertised
-            # ConcurrentWriteError retry must not leak one dead cache pair
-            # per conflicted attempt).
-            _release_intermediates(merged)
-        self.spark.catalog.refreshByPath(self.path)
+        # The displaced files — the exact file set the target slice read —
+        # go on the superseded ledger under this commit's generation.
+        self._transact(
+            op,
+            manifest,
+            t0,
+            frame=lambda: (merge_fn or self.merge_fn)(target_slice, batch, self.cfg),
+            buckets=affected,
+            displaced=files,
+            txn={txn_app: txn_epoch} if txn_epoch is not None else None,
+        )
 
     def rebucket(self, new_count: int) -> DataFrame:
         """Change the table's bucket count — the maintenance op for data
@@ -1513,85 +1541,37 @@ class ScdTable:
                 f"{self.path}; rebuild unbucketed/legacy tables with "
                 "build(full_refresh=True) instead"
             )
-        if "gen" not in manifest:
-            manifest = self._normalize_manifest(manifest)
-        manifest.setdefault("superseded", {})
         t0 = time.perf_counter()
-        self._sweep_orphan_generations()
-        self._sweep_stale_stages()
+        manifest = self._open_manifest(manifest)
         old_files, stale = self._affected_files(
             manifest, sorted(manifest.get("buckets", {}))
         )
-        self.last_phase_times = {"list_affected": time.perf_counter() - t0}
-        t0 = time.perf_counter()
+        schema_json = manifest.get("schema")
+        if not old_files and not schema_json:
+            raise ValueError(
+                f"cannot rebucket empty schemaless table at {self.path}"
+            )
         # Plan the current table directly from the file list just resolved
         # (ONE listing serves both the read plan and the displaced ledger)
         # rather than via self.read() — which would also re-run bucket-count
         # adoption and refuse a handle constructed with the NEW count, the
-        # very caller this method exists for.
-        from pyspark.sql.types import StructType
-
-        schema_json = manifest.get("schema")
-        if not old_files:
-            if not schema_json:
-                raise ValueError(
-                    f"cannot rebucket empty schemaless table at {self.path}"
-                )
-            current = self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
-            )
-        elif stale or not schema_json:
-            current = self.spark.read.option("mergeSchema", "true").parquet(
-                *old_files
-            )
-        else:
-            current = self.spark.read.schema(
-                StructType.fromJson(json.loads(schema_json))
-            ).parquet(*old_files)
-        base_gen = manifest.get("gen", 0)
-        gen = base_gen + 1
-        gen_rel = _gen_dirname(gen)
-        gen_dir = os.path.join(self.path, gen_rel)
-        # Stage privately under the NEW mapping, claim the generation at
-        # commit — same optimistic-concurrency protocol as the incremental
-        # merge.  Handle state (partition_buckets / _explicit_buckets)
-        # flips only AFTER the commit succeeds: an aborted transaction
+        # very caller this method exists for.  Every bucket is rewritten
+        # under the new mapping, so the entries start empty.
+        manifest["buckets"] = {}
+        self._transact(
+            "rebucket",
+            manifest,
+            t0,
+            frame=lambda: self._leaf_read(old_files, stale, schema_json),
+            buckets=range(new_count),
+            displaced=old_files,
+            bucket_count=new_count,
+        )
+        # Handle state flips only AFTER the commit: an aborted transaction
         # must leave this handle merging under the OLD mapping, not
         # hard-failing every later build() on a bucket-count mismatch.
-        stage_dir = self._new_stage_dir()
-        (
-            current.withColumn(BUCKET_COL, self._bucket_expr(current, new_count))
-            .repartition(new_count, F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(stage_dir)
-        )
-        self.last_phase_times["rewrite"] = time.perf_counter() - t0
-        new_buckets: dict[str, dict] = {}
-        for name in os.listdir(stage_dir):
-            if not name.startswith(f"{BUCKET_COL}="):
-                continue
-            entry = self._scan_bucket_dir(os.path.join(stage_dir, name))
-            if entry is None:
-                continue
-            new_buckets[name.split("=", 1)[1]] = {
-                "paths": [f"{gen_rel}/{name}/{n}" for n in entry["files"]],
-                "rows": entry["rows"],
-            }
-        manifest["buckets"] = new_buckets
-        displaced = [os.path.relpath(p, self.path) for p in old_files]
-        if displaced:
-            manifest["superseded"][str(gen)] = displaced
-        manifest["gen"] = gen
-        manifest["schema"] = current.schema.json()
-        manifest["retain"] = self._retain(manifest)
-        manifest["bucket_count"] = new_count
-        manifest["op"] = "rebucket"
-        manifest["committed_at"] = time.time()
-        self._commit_and_vacuum(stage_dir, gen_dir, base_gen, manifest, gen)
         self.partition_buckets = new_count
         self._explicit_buckets = True
-        self.spark.catalog.refreshByPath(self.path)
         return self.read()
 
     def restore(self, gen: int) -> DataFrame:
@@ -1635,7 +1615,6 @@ class ScdTable:
                 f"manifest at {self.path}; rebuild unbucketed/legacy "
                 "tables with build(full_refresh=True) instead"
             )
-        manifest.setdefault("superseded", {})
         snap = self._retained_manifests().get(gen)
         if snap is None or not snap.get("schema"):
             raise ValueError(
@@ -1645,17 +1624,7 @@ class ScdTable:
                 "snapshots are vacuumed)"
             )
         t0 = time.perf_counter()
-        self._sweep_orphan_generations()
-        self._sweep_stale_stages()
-        # Backfill the CURRENT generation's snapshot if it is missing
-        # (crash between a commit's manifest replace and its snapshot
-        # write): the state this restore displaces must stay
-        # time-travel-readable for the full retention window — the same
-        # guarantee the merge path makes before displacing a state.
-        if manifest.get("schema") and not os.path.exists(
-            self._snapshot_manifest_path(manifest["gen"])
-        ):
-            self._write_snapshot_manifest(manifest)
+        manifest = self._open_manifest(manifest)
         restored_buckets: dict[str, dict] = {}
         restored_rel: set[str] = set()
         for b, e in (snap.get("buckets") or {}).items():
@@ -1675,8 +1644,6 @@ class ScdTable:
         current_files, _ = self._affected_files(
             manifest, sorted(manifest.get("buckets", {}))
         )
-        current_rel = {os.path.relpath(p, self.path) for p in current_files}
-        displaced = sorted(current_rel - restored_rel)
         # Re-referenced paths come OFF the ledger: they are live again, and
         # a later commit that displaces them re-ledgers them under ITS gen.
         for k in list(manifest["superseded"]):
@@ -1685,34 +1652,23 @@ class ScdTable:
                 manifest["superseded"][k] = kept
             else:
                 del manifest["superseded"][k]
-        base_gen = manifest["gen"]
-        new_gen = base_gen + 1
-        if displaced:
-            manifest["superseded"][str(new_gen)] = displaced
         manifest["buckets"] = restored_buckets
-        manifest["gen"] = new_gen
         manifest["schema"] = snap["schema"]
-        manifest["retain"] = self._retain(manifest)
-        new_bucket_count = snap.get("bucket_count") or self.partition_buckets
-        manifest["bucket_count"] = new_bucket_count
-        manifest["op"] = "restore"
-        manifest["committed_at"] = time.time()
-        self.last_phase_times = {"plan_restore": time.perf_counter() - t0}
-        stage_dir = self._new_stage_dir()
-        os.makedirs(stage_dir)
-        self._commit_and_vacuum(
-            stage_dir,
-            os.path.join(self.path, _gen_dirname(new_gen)),
-            base_gen,
+        self._transact(
+            "restore",
             manifest,
-            new_gen,
+            t0,
+            displaced=[
+                p for p in current_files
+                if os.path.relpath(p, self.path) not in restored_rel
+            ],
+            bucket_count=snap.get("bucket_count"),
         )
         # Handle state flips only AFTER the commit (mirrors rebucket): an
         # aborted transaction must leave this handle on the old mapping.
-        if new_bucket_count:
-            self.partition_buckets = new_bucket_count
+        if manifest["bucket_count"]:
+            self.partition_buckets = manifest["bucket_count"]
             self._explicit_buckets = True
-        self.spark.catalog.refreshByPath(self.path)
         return self.read()
 
     def delete_keys(self, keys: DataFrame) -> DataFrame:
@@ -1822,14 +1778,8 @@ class ScdTable:
                 # cannot clobber a rival's newer commit.
                 self._write_manifest(manifest)
             if retain_generations is not None:
-                # Expire snapshot manifests past the override window: the
-                # files they reference are gone — serving them would lie.
-                for g in list(self._retained_manifests()):
-                    if g < gen - retain_generations:
-                        try:
-                            os.remove(self._snapshot_manifest_path(g))
-                        except OSError:
-                            pass
+                # Expire snapshot manifests past the override window.
+                self._expire_snapshots(gen - retain_generations)
         if removed:
             self.spark.catalog.refreshByPath(self.path)
         return removed
@@ -1850,7 +1800,7 @@ class ScdTable:
             # One ~50k-row file per bucket dir; without the co-locating
             # repartition the initial build writes up to tasks×buckets
             # small files and every incremental merge pays an O(files)
-            # listing of the whole table (see _build_bucketed_incremental).
+            # listing of the whole table (see _transact).
             df = df.repartition(self.partition_buckets, F.col(BUCKET_COL))
             writer = df.write.mode("overwrite").partitionBy(BUCKET_COL)
         writer.parquet(tmp)
@@ -1876,36 +1826,23 @@ class ScdTable:
                 seeded["gen"] = max(
                     seeded.get("gen", 0), prior_manifest.get("gen", 0) + 1
                 )
-            seeded["retain"] = self._retain(
-                prior_manifest if prior_manifest is not None else seeded
+            self._stamp(
+                seeded,
+                "create",
+                txn={txn_app: txn_epoch} if txn_epoch is not None else None,
+                prior=prior_manifest,
             )
-            seeded["bucket_count"] = self.partition_buckets
-            seeded["op"] = "create"
-            seeded["committed_at"] = time.time()
-            txn = dict((prior_manifest or {}).get("txn") or {})
-            if txn_epoch is not None:
-                txn[txn_app] = txn_epoch
-            if txn:
-                seeded["txn"] = txn
-            for name in (
-                "_scd_manifest.json",
-                f"_scd_manifest.{seeded.get('gen', 0):08d}.json",
-            ):
-                with open(os.path.join(tmp, name), "w") as f:
-                    json.dump(seeded, f)
-        with open(os.path.join(tmp, "_scd_meta.json"), "w") as f:
-            json.dump(
-                {"materialized": self.MATERIALIZATION, "scd_type": self.cfg.scd_type},
-                f,
-            )
+            for name in (MANIFEST, _snapshot_name(seeded.get("gen", 0))):
+                _dump_json(os.path.join(tmp, name), seeded)
+        self._write_meta(tmp)
         old = self.path + "__old"
         if os.path.exists(self.path):
             os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old, ignore_errors=True)
         # Release the merge's persisted intermediates BEFORE refreshing —
-        # same ordering as _build_bucketed_incremental: they were planned
-        # over leaf files the swap just deleted, and refreshByPath would
+        # same ordering as _transact: they were planned over leaf files
+        # the swap just deleted, and refreshByPath would
         # otherwise recache the dead plans (re-listing deleted files on
         # every vanilla merge).
         _release_intermediates(result)

@@ -868,7 +868,6 @@ def test_recovery_gen_precedence_is_numeric_not_lexical(spark, tmp_path):
     assert recon["superseded"] == {"100000000": [f"{old_rel}/old.parquet"]}
 
 
-@pytest.mark.slow
 def test_rebucket_mid_churn_time_travel_and_retention(spark, tmp_path):
     """The read_at_gen × rebucket × vacuum COMPOSITION (each piece is
     pinned separately): merges, then a rebucket, then more merges — the
@@ -939,7 +938,6 @@ def test_history_lists_retained_generations(spark, tmp_path):
     assert gens == [4, 3, 2], gens
 
 
-@pytest.mark.slow
 def test_concurrent_merge_conflict_raises_not_lost_update(spark, tmp_path):
     """Optimistic concurrency: a merge that planned against generation G
     must ABORT (ConcurrentWriteError, nothing visible, stage cleaned)
@@ -1330,14 +1328,20 @@ def test_degraded_lock_skips_destructive_maintenance(
     assert not os.path.exists(rival), "locked sweep still clears orphans"
 
 
-def test_aborted_rebucket_leaves_handle_usable(spark, tmp_path, monkeypatch):
-    """A rebucket that LOSES the commit race must leave the handle on the
-    OLD mapping: flipping partition_buckets before the commit meant an
-    abort bricked every later build() on this handle with the
-    bucket-count-mismatch error."""
+@pytest.mark.parametrize("op", ["build", "delete_keys", "rebucket", "restore"])
+def test_aborted_rebucket_leaves_handle_usable(spark, tmp_path, monkeypatch, op):
+    """A write that LOSES the commit race aborts with nothing visible,
+    whatever the operation — merge (``build``), ``delete_keys``,
+    ``rebucket`` or ``restore`` all commit through one transaction: the
+    ConcurrentWriteError surfaces, the manifest is byte-identical, no
+    stage dir is left behind, and the handle stays on the OLD mapping
+    (flipping partition_buckets before the commit meant an aborted
+    rebucket bricked every later build() on this handle with the
+    bucket-count-mismatch error)."""
     import pytest as _pytest
 
     from dbt_scd2_utils_spark.plans.build import (
+        STAGE_PREFIX,
         ConcurrentWriteError,
         ScdTable as _ScdTable,
     )
@@ -1345,6 +1349,18 @@ def test_aborted_rebucket_leaves_handle_usable(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "rb_abort")
     t = ScdTable(spark, path, CFG, partition_buckets=4)
     t.build(spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA))
+    with open(t._manifest_path(), "rb") as f:
+        manifest_before = f.read()
+    attempt = {
+        "build": lambda: t.build(
+            spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA)
+        ),
+        "delete_keys": lambda: t.delete_keys(
+            spark.createDataFrame([(1,)], "customer_id int")
+        ),
+        "rebucket": lambda: t.rebucket(16),
+        "restore": lambda: t.restore(0),
+    }[op]
 
     def lose_the_race(self, stage_dir, gen_dir, base_gen, manifest):
         import shutil as _sh
@@ -1354,10 +1370,13 @@ def test_aborted_rebucket_leaves_handle_usable(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(_ScdTable, "_commit_transaction", lose_the_race)
     with _pytest.raises(ConcurrentWriteError):
-        t.rebucket(16)
+        attempt()
     monkeypatch.undo()
 
-    assert t.partition_buckets == 4, "aborted rebucket must not flip state"
+    with open(t._manifest_path(), "rb") as f:
+        assert f.read() == manifest_before, "aborted commit left the manifest"
+    assert not [n for n in os.listdir(path) if n.startswith(STAGE_PREFIX)]
+    assert t.partition_buckets == 4, "aborted commit must not flip state"
     # ... and the handle keeps merging under the old mapping, no mismatch.
     out = t.build(spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA))
     _assert_same(out, _expected(spark, str(tmp_path / "rba12"),
@@ -1365,7 +1384,6 @@ def test_aborted_rebucket_leaves_handle_usable(spark, tmp_path, monkeypatch):
     assert t._read_manifest()["bucket_count"] == 4
 
 
-@pytest.mark.slow
 def test_concurrent_threads_serialize_without_lost_updates(spark, tmp_path):
     """TRUE concurrency integration pin: two threads merge interleaved
     batches into one table, retrying on ConcurrentWriteError — every

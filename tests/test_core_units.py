@@ -4,6 +4,7 @@ incremental source helpers."""
 from __future__ import annotations
 
 from datetime import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -156,10 +157,15 @@ def test_release_entry_caches_frees_query_layer(spark):
     em._staged_target(spark, sf, em.SCD2_CFG, "collapse")  # memo cache
     assert len(caching._LIVE_CACHES) >= 1
     assert len(em._MERGE_TARGET_CACHE) == 1
+    staged = list(em._STAGED_DIRS)
+    assert staged and all(os.path.isdir(d) for d in staged)
     released = em.release_entry_caches()
     assert released >= 2
     assert caching._LIVE_CACHES == []
     assert em._MERGE_TARGET_CACHE == {} and em._INDEX_CACHE == {}
+    # The staged target's parquet dir goes with its memo entry.
+    assert not any(os.path.exists(d) for d in staged)
+    assert em._STAGED_DIRS == []
     # idempotent on an empty registry
     assert em.release_entry_caches() == 0
 

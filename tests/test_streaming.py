@@ -12,7 +12,6 @@ from dbt_scd2_utils_spark.streaming.scd2_stream import (
     scd2_write_stream,
 )
 from tests.fixtures.seeds import CUSTOMERS_RAW, CUSTOMERS_SCHEMA
-import pytest
 
 CFG = ScdConfig(unique_key=("customer_id",), deleted_at_column="deleted_at")
 
@@ -134,7 +133,6 @@ def test_bucketed_stream_equals_batch_and_replay_is_exactly_once(spark, tmp_path
     assert m["txn"]["appB"] == 0 and m["txn"]["default"] == last + 1
 
 
-@pytest.mark.slow
 def test_bucketed_sink_retries_lost_commit_race(spark, tmp_path, monkeypatch):
     """A micro-batch that loses the commit race must be RETRIED inside
     foreach_batch (a conflict means another writer committed — progress —
