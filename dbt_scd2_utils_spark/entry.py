@@ -215,14 +215,16 @@ from events
 
 _STREAM_BUILDERS: dict = {}
 
-# Every directory a session memo stages into (the streaming stages, the
-# staged merge targets, the bucketed gate tables, the DSIR ratio artifact):
+# Every directory the query layer stages into (the memos' streaming stages,
+# staged merge targets, bucketed gate tables and DSIR ratio artifact, and
+# the one-shot JSONL, date-partitioned and failure-record queries' dirs):
 # release_entry_caches() removes them with the memos that point at them.
 _STAGED_DIRS: list[str] = []
 
 
 def _staging_dir(prefix: str) -> str:
-    """A fresh temp dir for a session memo, recorded for release."""
+    """A fresh temp dir for a memo or a query's written input, recorded
+    for release."""
     import tempfile
 
     d = tempfile.mkdtemp(prefix=prefix)
@@ -1635,12 +1637,10 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-file format a real LLM pipeline ingests; byte-equality with
     the parquet source is the oracle (sources/formats.py)."""
     prepare(spark)
-    import tempfile
-
     from .sources.formats import CORRUPT_COL, read_jsonl, write_jsonl
 
     ev = load_table(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="scd_jsonl_") + "/events"
+    path = _staging_dir("scd_jsonl_") + "/events"
     write_jsonl(ev, path)
     return read_jsonl(spark, path, ev.schema).drop(CORRUPT_COL)
 
@@ -1651,12 +1651,10 @@ def q_events_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan — asserted in tests/test_formats.py), so 1 day of a 100 TB
     stream costs 1/365th, not a full scan."""
     prepare(spark)
-    import tempfile
-
     from .sources.formats import read_date_partition, write_date_partitioned
 
     ev = load_table(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="scd_part_") + "/events"
+    path = _staging_dir("scd_part_") + "/events"
     write_date_partitioned(ev, path)
     return read_date_partition(spark, path, "2024-01-16").select(
         "event_id", "user_id", "event_type", "value",
@@ -1723,14 +1721,12 @@ def q_invariant_store_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the oracle sees is what was written to disk
     (operators/invariants.py::store_failures)."""
     prepare(spark)
-    import tempfile
-
     from .operators.invariants import one_current_per_key, store_failures
 
     built = _qcache(scd2_initial_load(change_feed(spark, sf_dir), SCD2_CFG))
     dup = built.filter((F.col("user_id") == 0) & F.col("_is_current"))
     corrupted = built.unionByName(dup)
-    base = tempfile.mkdtemp(prefix="scd_failures_")
+    base = _staging_dir("scd_failures_")
     counts = store_failures(
         {"one_current_per_key": one_current_per_key(corrupted, ["user_id"])},
         base,

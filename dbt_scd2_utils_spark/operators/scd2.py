@@ -5,9 +5,20 @@ Spark-first re-expression of the reference's generated-SQL pipeline:
 * initial load  ≡ ``macros/materializations/scd/types/type_2/get_initial_load_scd2_sql.sql:52-96``
 * incremental   ≡ ``macros/materializations/scd/types/type_2/get_incremental_scd2_sql.sql:75-268``
 
-Each reference CTE is a named DataFrame; the MERGE sink is re-expressed as a
-broadcast left join + union (no full-outer join, so the big side streams
-through a broadcast hash join — scale notes at the bottom of this module).
+Each reference CTE is a named DataFrame.  The incremental merge takes one
+of two shapes (``scd2_incremental`` picks):
+
+* **bucket-local** (``_bucket_local_merge``) when the target is a bucketed
+  ``ScdTable``'s affected-bucket slice (the sink attaches
+  ``_scd_bucketing``): target slice and batch are unioned and shuffled
+  ONCE on ``_scd_bucket``; every per-key CTE and the MERGE's update rules
+  run as windows inside that partitioning, and the result feeds the
+  sink's bucket-partitioned write with no further exchange;
+* **broadcast** (``build_scd2_merge_source`` + a broadcast left join and
+  union) for an unbounded target — the vanilla sink's whole table — where
+  shuffling the big side is what the broadcast avoids; also for
+  ``incremental_predicates``, an explicit ``broadcast_source``, and the
+  salted route's split frames.
 
 Documented deviation (SURVEY.md §7.0): the reference dedups duplicate
 ``(business key, updated_at)`` rows with ``row_number() over (... order by 1)``
@@ -75,6 +86,10 @@ RUN_ID_COL = "_run_id"
 SOURCE_COL = "_source"
 PRIORITY_COL = "_priority"
 OP_COL = "_scd2_op"
+IN_MERGE_COL = "_in_merge"
+# The bucketed sink's partition column; a bucket-local merge result carries
+# it (plans/build.py writes such a frame as is).
+BUCKET_COL = "_scd_bucket"
 
 
 def _orderable(df: DataFrame, cols: Sequence[str]) -> list[str]:
@@ -109,6 +124,24 @@ def _dedup_order(
     return order or [F.lit(1).asc()]
 
 
+def _is_dup_expr(
+    df: DataFrame, cfg: ScdConfig, business_cols: Sequence[str],
+    with_priority: bool, keys: Sequence[str],
+) -> Column:
+    """True on every row of an (``keys``, updated_at)-group but the first
+    under the deterministic tiebreak order (W6)."""
+    u = F.col(cfg.updated_at_column)
+    w = Window.partitionBy(*keys).orderBy(
+        u.asc_nulls_last(),
+        *_dedup_order(df, cfg, business_cols, with_priority=with_priority),
+    )
+    # lag(u) is NULL both for "no previous row" and "previous row with NULL
+    # updated_at"; the marker disambiguates so a key whose updated_at values
+    # are all NULL still keeps its first row (the reference's
+    # row_number()=1 per _scd2_key keeps one row for such keys too).
+    return F.lag(F.lit(1)).over(w).isNotNull() & F.lag(u).over(w).eqNullSafe(u)
+
+
 def _dedup_first_per_version(
     df: DataFrame, cfg: ScdConfig, business_cols: Sequence[str], with_priority: bool
 ) -> DataFrame:
@@ -119,24 +152,24 @@ def _dedup_first_per_version(
     Equivalent to ``row_number() over (partition by _scd2_key order by
     <priority, values>) = 1`` (W6) because ``_scd2_key`` ≡ (key, updated_at).
     """
-    u = F.col(cfg.updated_at_column)
-    w = Window.partitionBy(*cfg.unique_key).orderBy(
-        u.asc_nulls_last(),
-        *_dedup_order(df, cfg, business_cols, with_priority=with_priority),
-    )
-    prev_u = F.lag(u).over(w)
-    # lag(u) is NULL both for "no previous row" and "previous row with NULL
-    # updated_at"; the marker disambiguates so a key whose updated_at values
-    # are all NULL still keeps its first row (the reference's
-    # row_number()=1 per _scd2_key keeps one row for such keys too).
-    prev_marker = F.lag(F.lit(1)).over(w)
     return (
         df.withColumn(
-            "_is_dup", prev_marker.isNotNull() & prev_u.eqNullSafe(u)
+            "_is_dup",
+            _is_dup_expr(df, cfg, business_cols, with_priority, cfg.unique_key),
         )
         .filter(~F.col("_is_dup"))
         .drop("_is_dup")
     )
+
+
+def _survivor_order(cfg: ScdConfig, business_cols: Sequence[str]) -> list[Column]:
+    """Survivor order per (key, content-run) when collapsing: earliest
+    loaded, else earliest updated_at — get_incremental_scd2_sql.sql:178-197."""
+    order: list[Column] = []
+    if cfg.loaded_at_column.lower() in {c.lower() for c in business_cols}:
+        order.append(F.col(cfg.loaded_at_column).asc_nulls_last())
+    order.append(F.col(cfg.updated_at_column).asc_nulls_last())
+    return order
 
 
 def _with_hashes(
@@ -153,23 +186,29 @@ def _with_hashes(
     return out
 
 
+def _audit_exprs(cfg: ScdConfig, keys: Sequence[str]) -> list[Column]:
+    """The four audit columns derived over ``keys``-partitioned windows, in
+    ``cfg.audit_columns`` order (unaliased)."""
+    u = cfg.updated_at_column
+    return [
+        is_current_expr(keys, u),
+        valid_from_expr(keys, u, cfg.created_at_column, cfg.deleted_at_column),
+        valid_to_expr(keys, u, cfg.default_valid_to),
+        change_type_expr(keys, u, cfg.deleted_at_column),
+    ]
+
+
 def _audit_select(
     df: DataFrame, cfg: ScdConfig, business_cols: Sequence[str], extra: Sequence[Column] = (),
 ) -> DataFrame:
     """Project business columns + freshly derived audit columns
     (shared by initial load and the merge-source recompute)."""
-    keys = list(cfg.unique_key)
-    u = cfg.updated_at_column
     return df.select(
         *[F.col(c) for c in business_cols],
-        is_current_expr(keys, u).alias(cfg.is_current_column),
-        valid_from_expr(
-            keys, u, cfg.created_at_column, cfg.deleted_at_column
-        ).alias(cfg.valid_from_column),
-        valid_to_expr(keys, u, cfg.default_valid_to).alias(cfg.valid_to_column),
-        change_type_expr(keys, u, cfg.deleted_at_column).alias(
-            cfg.change_type_column
-        ),
+        *[
+            e.alias(c)
+            for e, c in zip(_audit_exprs(cfg, cfg.unique_key), cfg.audit_columns)
+        ],
         *extra,
     )
 
@@ -362,7 +401,6 @@ def build_scd2_merge_source(
     cfg.validate().validate_against_schema(batch.schema)
     business_cols = cfg.business_columns(batch.columns)
     check_cols = cfg.check_columns(batch.columns)
-    u = cfg.updated_at_column
 
     new_records = _with_hashes(
         batch.select(*business_cols), cfg, check_cols, business_key=True
@@ -396,13 +434,9 @@ def build_scd2_merge_source(
 
     # changes_only: canonical timeline.
     if cfg.effective_collapse:
-        # Survivor per (key, content-run): earliest-loaded, else earliest
-        # updated_at — get_incremental_scd2_sql.sql:178-197.
-        order: list[Column] = []
-        if cfg.loaded_at_column.lower() in {c.lower() for c in business_cols}:
-            order.append(F.col(cfg.loaded_at_column).asc_nulls_last())
-        order.append(F.col(u).asc_nulls_last())
-        changes_only = windows.collapse_survivors(compare, cfg, order)
+        changes_only = windows.collapse_survivors(
+            compare, cfg, _survivor_order(cfg, business_cols)
+        )
     else:
         changes_only = compare.filter(
             F.col(PREV_HASH_COL).isNull()
@@ -437,6 +471,113 @@ def build_scd2_merge_source(
     return source, prev, business_cols
 
 
+def _bucket_local_merge(
+    target: DataFrame, batch: DataFrame, cfg: ScdConfig,
+    bucket: Column, n_buckets: int,
+) -> DataFrame:
+    """The whole merge as one bucket-partitioned window chain, for a target
+    that is the affected buckets of a bucketed table (every version of
+    every batch key, plus the untouched keys sharing their buckets).
+
+    The target rows (priority 0, audit columns kept as ``_old<name>``) and
+    the batch (priority 17, NULL audit columns) are unioned, tagged with
+    ``bucket`` and the content hash, and shuffled ONCE into ``n_buckets``
+    partitions on ``_scd_bucket``.  Every later step is a window
+    partitioned by ``[_scd_bucket, *unique_key, _in_merge]``, a clustering
+    the bucket partitioning already satisfies, so no further Exchange, no
+    join and no persisted intermediate is planned.
+
+    ``_in_merge`` marks the rows the MERGE source would hold: a key's rows
+    when it has a batch row (``previous_records``' semi-join), or under
+    J2 pruning the batch rows plus the key's target rows with ``valid_to
+    >=`` the key's earliest batch ``updated_at``.  Rows outside it pass
+    through unchanged (a separate window partition; every filter is gated
+    on the flag).  Inside it, the CTE chain runs as in
+    ``build_scd2_merge_source`` — W6 dedup, run ids, collapse or
+    changes-only, audit recompute — and the MERGE's update rules apply per
+    row: a surviving target row takes only ``merge_update_cols`` from the
+    recomputed values, a surviving batch row (an insert) takes all four,
+    and a target row collapsed out of the timeline is dropped (the
+    MERGE's delete).  The result carries ``_scd_bucket``, hash-partitioned
+    on it, for the sink's partitioned write."""
+    business_cols = cfg.business_columns(batch.columns)
+    check_cols = cfg.check_columns(batch.columns)
+    keys = list(cfg.unique_key)
+    u = cfg.updated_at_column
+    old = {c: f"_old{c}" for c in cfg.audit_columns}
+    types = {f.name.lower(): f.dataType for f in target.schema.fields}
+    rows = (
+        target.select(
+            *business_cols,
+            *[F.col(c).alias(o) for c, o in old.items()],
+            F.lit(0).alias(PRIORITY_COL),
+        )
+        .unionByName(
+            batch.select(
+                *business_cols,
+                *[F.lit(None).cast(types[c.lower()]).alias(o) for c, o in old.items()],
+                F.lit(17).alias(PRIORITY_COL),
+            )
+        )
+        .withColumns({BUCKET_COL: bucket, HASH_COL: surrogate_key(check_cols)})
+        .repartition(n_buckets, BUCKET_COL)
+    )
+
+    is_new = F.col(PRIORITY_COL) == 17
+    per_key = Window.partitionBy(BUCKET_COL, *keys)
+    if cfg.update_all_previous_records:
+        in_merge = F.max(PRIORITY_COL).over(per_key) == 17
+    else:
+        first_new = F.min(F.when(is_new, F.col(u))).over(per_key)
+        in_merge = is_new | F.coalesce(
+            F.col(old[cfg.valid_to_column]) >= first_new, F.lit(False)
+        )
+    rows = rows.withColumn(IN_MERGE_COL, in_merge)
+    merging = F.col(IN_MERGE_COL)
+    part = [BUCKET_COL, *keys, IN_MERGE_COL]
+
+    # pick_a_key_any_key: previous wins (priority 0 < 17), then values.
+    rows = rows.withColumn(
+        "_is_dup", _is_dup_expr(rows, cfg, business_cols, True, part)
+    ).filter(~(merging & F.col("_is_dup")))
+
+    if cfg.effective_collapse:
+        # Survivor per (key, content-run), as in build_scd2_merge_source.
+        rows = rows.withColumn(
+            RUN_ID_COL, conditional_change_event(HASH_COL, part, u)
+        ).withColumn(
+            "_rrn",
+            F.row_number().over(
+                Window.partitionBy(*part, RUN_ID_COL).orderBy(
+                    *_survivor_order(cfg, business_cols)
+                )
+            ),
+        )
+        keep = F.col("_rrn") == 1
+    else:
+        rows = rows.withColumn(
+            PREV_HASH_COL, F.lag(HASH_COL).over(key_window(part, u))
+        )
+        keep = (
+            F.col(PREV_HASH_COL).isNull()
+            | (F.col(HASH_COL) != F.col(PREV_HASH_COL))
+            | ~is_new  # never drop a persisted version
+        )
+    rows = rows.filter(~merging | keep)
+
+    update_set = {c.lower() for c in cfg.merge_update_cols}
+    return rows.select(
+        *business_cols,
+        *[
+            F.when(
+                merging & (is_new | F.lit(c.lower() in update_set)), e
+            ).otherwise(F.col(old[c])).alias(c)
+            for e, c in zip(_audit_exprs(cfg, part), cfg.audit_columns)
+        ],
+        BUCKET_COL,
+    )
+
+
 def scd2_incremental(
     target: DataFrame, batch: DataFrame, cfg: ScdConfig,
     broadcast_source: bool | None = None,
@@ -450,12 +591,32 @@ def scd2_incremental(
     SCD2 key; matched 'delete' rows drop, matched 'upsert' rows update only
     ``cfg.merge_update_cols``, unmatched 'upsert' rows insert.
 
-    Physical shape at scale: the (delta-sized) merge source is broadcast, so
-    the target streams through ONE broadcast left join — no shuffle of the
-    big side, no full-outer join.  The inserts anti-join runs between two
-    small DataFrames.  The rewrite-the-table sink cost is inherent to the
-    vanilla (non-Delta) path; `scd_build` can shard it with bucketed
-    partitioning.
+    Two physical shapes compute the same rows:
+
+    * **Bucket-local**, when ``target`` carries ``_scd_bucketing`` (a
+      bucketed ``ScdTable`` attaches its bucket expression and
+      affected-bucket count to the target slice it passes in): see
+      ``_bucket_local_merge``.  One shuffle on ``_scd_bucket``, no join,
+      no persist, and the result carries ``_scd_bucket`` so the sink
+      writes it without repartitioning.  The slice is bounded by the
+      affected buckets, so shuffling all of it is cheap, and it holds
+      every version of every batch key, so each key's merge is local to
+      one partition.
+    * **Broadcast** otherwise: the (delta-sized) merge source is
+      broadcast, so the target streams through ONE broadcast left join —
+      no shuffle of the big side, no full-outer join — and the inserts
+      anti-join runs between two small DataFrames.  This is the shape for
+      an unbounded target (the vanilla sink's whole table, whose
+      rewrite-the-table cost is inherent to the non-Delta path).  It also
+      runs, even on a bucketed slice, for ``incremental_predicates`` (a
+      predicate-failing target row must not match, so its source twin
+      inserts — the MERGE ON duplication hazard the inserts anti-join
+      mirrors), for an explicit ``broadcast_source`` (the caller forces
+      a join shape), and for a non-default ``windows`` strategy.  The
+      salted route's hot/cold split frames are joins of the slice, so
+      they carry no attribute and take this shape too.
+
+    The rest of this note is about the broadcast shape.
 
     ``broadcast_source=None`` (default) sizes the decision at run time: the
     persisted source's row count is compared against ``broadcast_max_rows``
@@ -481,9 +642,17 @@ def scd2_incremental(
     cfg = cfg.validate()
     cfg.validate_against_schema(batch.schema)
     row_bound = getattr(target, "_scd_row_bound", None)
+    bucketing = getattr(target, "_scd_bucketing", None)
     # Schema evolution (add/drop column) aligns the two sides next; a
     # no-op driver-side when schemas agree (see align_evolved_schemas).
     target, batch = align_evolved_schemas(target, batch, cfg)
+    if (
+        bucketing is not None
+        and broadcast_source is None
+        and windows is DEFAULT_WINDOWS
+        and not cfg.incremental_predicates
+    ):
+        return _bucket_local_merge(target, batch, cfg, *bucketing)
     source, prev, business_cols = build_scd2_merge_source(
         target, batch, cfg, windows=windows
     )

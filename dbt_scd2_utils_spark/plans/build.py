@@ -30,11 +30,10 @@ from ..operators.scd01 import (
     scd1_incremental,
     scd1_initial_load,
 )
-from ..operators.scd2 import scd2_incremental, scd2_initial_load
+from ..operators.scd2 import BUCKET_COL, scd2_incremental, scd2_initial_load
 from .config import ScdConfig
 
 
-BUCKET_COL = "_scd_bucket"
 # Generation directories hold each bucketed merge's rewritten bucket files
 # (immutable once written; underscore prefix keeps them invisible to Spark's
 # partition discovery until the manifest references them).
@@ -392,35 +391,39 @@ class ScdTable:
         rows.sort(key=lambda r: -r[0])
         return self.spark.createDataFrame(rows, schema)
 
+    def _manifest_at(self, gen: int) -> dict:
+        """The manifest generation ``gen`` committed: its one
+        ``_scd_manifest.<gen>.json`` snapshot, else the current manifest
+        when that is ``gen`` — the current generation stays servable even
+        if its snapshot copy is missing (crash between the manifest commit
+        and the snapshot write, or a legacy table normalized in place whose
+        base gen predates snapshots).  An unreadable or schema-less
+        snapshot counts as missing.  Raises ``ValueError`` for any other
+        generation: it is outside the retention window."""
+        try:
+            with open(self._snapshot_manifest_path(gen)) as f:
+                manifest = json.load(f)
+        except (OSError, ValueError):
+            manifest = None
+        if manifest is not None and manifest.get("schema"):
+            return manifest
+        current = self._read_manifest()
+        if current is not None and current.get("gen") == gen and current.get("schema"):
+            return current
+        raise ValueError(
+            f"no retained snapshot for generation {gen} "
+            f"(current gen: {(current or {}).get('gen')}, retention: "
+            f"{self._retain(current)} generations — older "
+            "snapshots are vacuumed)"
+        )
+
     def read_at_gen(self, gen: int) -> DataFrame:
         """Time-travel read: serve the table EXACTLY as generation ``gen``
         committed it (Delta's ``VERSION AS OF`` in miniature).  Valid for
         any generation still inside the vacuum retention window — its
         manifest snapshot and every file it references are retained for
         ``retain_generations`` further commits by construction."""
-        try:
-            with open(self._snapshot_manifest_path(gen)) as f:
-                manifest = json.load(f)
-        except OSError:
-            # The CURRENT generation is always servable from the main
-            # manifest even if its snapshot copy is missing (crash between
-            # the manifest commit and the snapshot write, or a legacy
-            # table normalized in place whose base gen predates snapshots).
-            current_manifest = self._read_manifest()
-            if (
-                current_manifest is not None
-                and current_manifest.get("gen") == gen
-                and current_manifest.get("schema")
-            ):
-                manifest = current_manifest
-            else:
-                current = (current_manifest or {}).get("gen")
-                raise ValueError(
-                    f"no retained snapshot for generation {gen} "
-                    f"(current gen: {current}, retention: "
-                    f"{self._retain(current_manifest)} generations — older "
-                    "snapshots are vacuumed)"
-                ) from None
+        manifest = self._manifest_at(gen)
         files, stale = self._affected_files(
             manifest, sorted(manifest.get("buckets", {}))
         )
@@ -983,8 +986,11 @@ class ScdTable:
         - ``frame()`` plans the rows to write (called inside the timed
           stage phase; its merge intermediates are released whether the
           commit succeeds or aborts), staged under ``bucket_count``'s
-          mapping (default: this handle's) as one file per bucket;
-          ``frame=None`` stages nothing (a metadata-only commit);
+          mapping (default: this handle's) as one file per bucket; a frame
+          that already carries ``_scd_bucket`` (a bucket-local merge,
+          hash-partitioned on it) is written as is, and the manifest
+          records its schema without that column; ``frame=None`` stages
+          nothing (a metadata-only commit);
         - ``buckets``: the bucket ids the stage rewrites — each entry is
           replaced by its staged files, or dropped if none were staged;
         - ``displaced``: data files (absolute) the commit stops
@@ -1025,22 +1031,23 @@ class ScdTable:
             if result is None:
                 os.makedirs(stage_dir)
             else:
-                (
-                    result.withColumn(
+                staged = result
+                if BUCKET_COL not in result.columns:
+                    # One file per rewritten bucket (not one per shuffle
+                    # task per bucket): without this co-location the
+                    # generation dirs inherit the task fan-out and the
+                    # table's file count grows ∝ writes × buckets — every
+                    # later merge then pays a listing of all of them
+                    # (measured: the s40 bucketed merge cost grew WITH the
+                    # table until this fix).  A bucket-local merge result
+                    # already carries the column, hash-partitioned on it.
+                    staged = result.withColumn(
                         BUCKET_COL, self._bucket_expr(result, bucket_count)
-                    )
-                    # One file per rewritten bucket (not one per shuffle task
-                    # per bucket): without this co-location the generation
-                    # dirs inherit the task fan-out and the table's file
-                    # count grows ∝ writes × buckets — every later merge then
-                    # pays a listing of all of them (measured: the s40
-                    # bucketed merge cost grew WITH the table until this fix).
-                    .repartition(len(buckets), F.col(BUCKET_COL))
-                    .write.mode("overwrite")
-                    .partitionBy(BUCKET_COL)
-                    .parquet(stage_dir)
+                    ).repartition(len(buckets), F.col(BUCKET_COL))
+                staged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
+                    stage_dir
                 )
-                manifest["schema"] = result.schema.json()
+                manifest["schema"] = result.drop(BUCKET_COL).schema.json()
             self.last_phase_times["merge_and_stage"] = time.perf_counter() - t0
             # The generation is durable and invisible: patch the rewritten
             # buckets' entries (O(rewritten) scanning, not O(table)).
@@ -1500,11 +1507,16 @@ class ScdTable:
             # No files AND no recorded schema (legacy empty table): derive
             # the SCD output schema from the batch itself.
             target_slice = scd2_initial_load(batch.limit(0), self.cfg)
+        # Both travel on the target slice like _scd_intermediates on a
+        # result, and any other merge_fn ignores them.  The bucketing (the
+        # bucket expression and the affected-bucket count) lets the stock
+        # merge run bucket-local: the slice holds every version of every
+        # batch key, so one shuffle on the bucket serves the whole merge
+        # and the write.  The row bound lets the adaptive merge skip its
+        # hot-key detection jobs.
+        target_slice._scd_bucketing = (self._bucket_expr(target_slice), len(affected))
         slice_rows = self._slice_row_bound(manifest, affected, stale)
         if slice_rows is not None:
-            # Travels on the target slice like _scd_intermediates on a
-            # result: the stock merges read it to skip their probe jobs,
-            # any other merge_fn ignores it.
             target_slice._scd_row_bound = slice_rows + sum(r[1] for r in bucket_rows)
         # The displaced files — the exact file set the target slice read —
         # go on the superseded ledger under this commit's generation.
@@ -1615,14 +1627,7 @@ class ScdTable:
                 f"manifest at {self.path}; rebuild unbucketed/legacy "
                 "tables with build(full_refresh=True) instead"
             )
-        snap = self._retained_manifests().get(gen)
-        if snap is None or not snap.get("schema"):
-            raise ValueError(
-                f"no retained snapshot for generation {gen} "
-                f"(current gen: {manifest.get('gen')}, retention: "
-                f"{self._retain(manifest)} generations — older "
-                "snapshots are vacuumed)"
-            )
+        snap = self._manifest_at(gen)
         t0 = time.perf_counter()
         manifest = self._open_manifest(manifest)
         restored_buckets: dict[str, dict] = {}

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from dbt_scd2_utils_spark import ScdConfig
 from dbt_scd2_utils_spark.plans.build import BUCKET_COL, GEN_PREFIX, ScdTable
 from tests.fixtures.seeds import CUSTOMERS_RAW, CUSTOMERS_SCHEMA
+from tests.test_bucket_local_merge import assert_bucket_local_plan
 import pytest
 
 CFG = ScdConfig(unique_key=("customer_id",), deleted_at_column="deleted_at")
@@ -1485,7 +1486,7 @@ class _MergeProbe:
     def __init__(self, spark, strategy):
         self.sc = spark.sparkContext
         self.strategy = strategy
-        self.bounds, self.broadcasts, self._groups = [], [], []
+        self.bounds, self.broadcasts, self.results, self._groups = [], [], [], []
 
     def __call__(self, target, batch, cfg):
         group = f"merge_fn-{id(self)}-{len(self._groups)}"
@@ -1502,6 +1503,7 @@ class _MergeProbe:
             "rightHint=(strategy=broadcast)" in line
             for line in plan.splitlines() if "Join LeftOuter" in line
         ]
+        self.results.append(out)
         return out
 
     def jobs(self) -> list:
@@ -1536,7 +1538,7 @@ def test_manifest_bound_merge_submits_no_jobs(spark, tmp_path):
     out = t.build(b2)
     assert probe.jobs() == []
     assert routes == [("plain", 0)]
-    assert probe.broadcasts == [True]
+    assert_bucket_local_plan(probe.results[0])
     # The bound is exact here: the affected buckets' rows plus the batch.
     m0 = json.load(open(t._snapshot_manifest_path(0)))
     slice_rows = sum(m0["buckets"][b]["rows"] for b in _touched(t, b2))
@@ -1606,6 +1608,32 @@ def test_manifest_bound_loses_to_explicit_broadcast_false(spark, tmp_path):
 
 
 # ---- restore (RESTORE TABLE ... VERSION AS OF in miniature) ---------------
+
+
+def test_restore_opens_only_the_target_snapshot(spark, tmp_path, monkeypatch):
+    """restore(G) reads generation G's snapshot file and no other: the
+    cost of finding the target does not grow with the retention window."""
+    import re
+
+    import dbt_scd2_utils_spark.plans.build as build_mod
+
+    t = ScdTable(spark, str(tmp_path / "one"), CFG, partition_buckets=4,
+                 retain_generations=10)
+    for i in (1, 2, 3, 4):
+        t.build(spark.createDataFrame(CUSTOMERS_RAW[i], CUSTOMERS_SCHEMA))
+    assert len(t._snapshots()) == 4
+    opened = []
+
+    def spy(path, mode="r", *a, **kw):
+        if "r" in mode and re.search(r"_scd_manifest\.\d+\.json$", str(path)):
+            opened.append(os.path.basename(path))
+        return open(path, mode, *a, **kw)
+
+    monkeypatch.setattr(build_mod, "open", spy, raising=False)
+    t.restore(1)
+    monkeypatch.undo()
+    assert opened == ["_scd_manifest.00000001.json"]
+    assert t._read_manifest()["op"] == "restore"
 
 
 def test_restore_rolls_back_as_new_commit(spark, tmp_path):

@@ -157,6 +157,13 @@ def test_release_entry_caches_frees_query_layer(spark):
     em._staged_target(spark, sf, em.SCD2_CFG, "collapse")  # memo cache
     assert len(caching._LIVE_CACHES) >= 1
     assert len(em._MERGE_TARGET_CACHE) == 1
+    # The one-shot queries that write their input before reading it back
+    # stage through the same registry.
+    memo_dirs = len(em._STAGED_DIRS)
+    for q in (em.q_jsonl_roundtrip, em.q_events_partition_pruned,
+              em.q_invariant_store_failures):
+        q(spark, sf).count()
+    assert len(em._STAGED_DIRS) == memo_dirs + 3
     staged = list(em._STAGED_DIRS)
     assert staged and all(os.path.isdir(d) for d in staged)
     released = em.release_entry_caches()
