@@ -88,7 +88,7 @@ def change_type_expr(
 
 
 def conditional_change_event(
-    value: str | Column, keys: Sequence[str], order_col: str
+    value: str | Column, prev: str | Column, keys: Sequence[str], order_col: str
 ) -> Column:
     """Emulation of Snowflake's ``CONDITIONAL_CHANGE_EVENT`` —
     ``get_incremental_scd2_sql.sql:164`` (run-id per consecutive same-value
@@ -97,12 +97,16 @@ def conditional_change_event(
     No Spark builtin exists; composed as
     ``sum( (value is distinct from lag(value)) :: int )`` over a running
     frame.  Stays fully inside whole-stage codegen (no UDF).
+
+    ``prev`` is ``lag(value)`` over ``key_window(keys, order_col)``,
+    materialized by the caller as a column: the change flag reads it twice,
+    and Catalyst extracts every window-expression occurrence into its own
+    window column, so an inline lag would be computed twice.
     """
     v = F.col(value) if isinstance(value, str) else value
+    p = F.col(prev) if isinstance(prev, str) else prev
     w = key_window(keys, order_col)
-    changed = (
-        F.lag(v).over(w).isNull() | (v != F.lag(v).over(w))
-    ).cast("int")
+    changed = (p.isNull() | (v != p)).cast("int")
     running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return F.sum(changed).over(running)
 

@@ -237,7 +237,8 @@ class KeyWindows:
             out = out.withColumn(
                 RUN_ID_COL,
                 conditional_change_event(
-                    HASH_COL, cfg.unique_key, cfg.updated_at_column
+                    HASH_COL, PREV_HASH_COL, cfg.unique_key,
+                    cfg.updated_at_column,
                 ),
             )
         return out
@@ -541,10 +542,14 @@ def _bucket_local_merge(
         "_is_dup", _is_dup_expr(rows, cfg, business_cols, True, part)
     ).filter(~(merging & F.col("_is_dup")))
 
+    rows = rows.withColumn(
+        PREV_HASH_COL, F.lag(HASH_COL).over(key_window(part, u))
+    )
     if cfg.effective_collapse:
         # Survivor per (key, content-run), as in build_scd2_merge_source.
         rows = rows.withColumn(
-            RUN_ID_COL, conditional_change_event(HASH_COL, part, u)
+            RUN_ID_COL,
+            conditional_change_event(HASH_COL, PREV_HASH_COL, part, u),
         ).withColumn(
             "_rrn",
             F.row_number().over(
@@ -555,9 +560,6 @@ def _bucket_local_merge(
         )
         keep = F.col("_rrn") == 1
     else:
-        rows = rows.withColumn(
-            PREV_HASH_COL, F.lag(HASH_COL).over(key_window(part, u))
-        )
         keep = (
             F.col(PREV_HASH_COL).isNull()
             | (F.col(HASH_COL) != F.col(PREV_HASH_COL))

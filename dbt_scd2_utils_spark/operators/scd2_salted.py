@@ -216,16 +216,16 @@ class SaltedKeyWindows(KeyWindows):
         order = [F.col(cfg.updated_at_column).asc_nulls_last()]
         g = self._ghosted(self._with_salt(df, cfg), cfg, order)
         w = self._w(cfg, order)
-        lag_hash = F.lag(HASH_COL).over(w)
-        out = g.withColumn(PREV_HASH_COL, lag_hash)
+        out = g.withColumn(PREV_HASH_COL, F.lag(HASH_COL).over(w))
         if with_runs:
             # conditional_change_event = running sum of change flags; the
             # flag is lag-local (ghost gives the true predecessor), the
             # running sum gets a per-salt offset from earlier salts' flag
-            # totals (ghost flags zeroed so they never count).
-            changed = (
-                lag_hash.isNull() | (F.col(HASH_COL) != lag_hash)
-            ).cast("int")
+            # totals (ghost flags zeroed so they never count).  The flag
+            # reads the materialized lag: an inline one would be computed
+            # once per reference.
+            prev = F.col(PREV_HASH_COL)
+            changed = (prev.isNull() | (F.col(HASH_COL) != prev)).cast("int")
             out = out.withColumn(
                 "_chg", F.when(F.col(GHOST_COL), F.lit(0)).otherwise(changed)
             ).withColumn(

@@ -85,6 +85,50 @@ def _dump_json(path: str, obj) -> None:
     os.replace(tmp, path)
 
 
+def _file_maxima(md) -> dict | None:
+    """{column: max epoch micros, None when null in every row} over the
+    top-level INT64 microsecond timestamp columns of one parquet file's
+    footer (``md``: pyarrow ``FileMetaData``), taken over every row group.
+    None (unknown) when the file has an INT96 column (no statistics), a
+    timestamp of another unit, or a row group holding non-null values
+    without statistics, and when Spark wrote it under the LEGACY datetime
+    rebase mode (its stored values are Julian-rebased, so the raw maxima
+    are not the values a read returns).  Nested timestamp columns are left
+    out."""
+    if b"org.apache.spark.legacyDateTime" in (md.metadata or {}):
+        return None
+    out: dict = {}
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        if col.physical_type == "INT96":
+            return None
+        if col.logical_type.type != "TIMESTAMP" or "." in col.path:
+            continue
+        if json.loads(col.logical_type.to_json()).get("timeUnit") != "microseconds":
+            return None
+        best = None
+        for r in range(md.num_row_groups):
+            rg = md.row_group(r)
+            st = rg.column(i).statistics
+            if st is not None and st.has_min_max:
+                best = st.max_raw if best is None else max(best, st.max_raw)
+            elif rg.num_rows and not (
+                st is not None and st.has_null_count and st.null_count == rg.num_rows
+            ):
+                return None
+        out[col.path] = best
+    return out
+
+
+def _merge_maxima(into: dict, other: dict) -> None:
+    """Fold ``other``'s column maxima into ``into`` (None = all null)."""
+    for c, v in other.items():
+        if v is not None and (into.get(c) is None or v > into[c]):
+            into[c] = v
+        else:
+            into.setdefault(c, None)
+
+
 def _release_intermediates(result: DataFrame) -> None:
     """Unpersist the merge intermediates an operator attached to its result
     (see ``scd2_incremental``).  Call only after the result has been
@@ -225,7 +269,7 @@ class ScdTable:
     #
     # The in-repo stand-in for a table format's commit log (Delta/Iceberg,
     # which this environment cannot install): a tiny JSON file mapping
-    # bucket id -> {files, rows} plus the on-disk data schema, rewritten
+    # bucket id -> {files, rows, max} plus the on-disk data schema, rewritten
     # ATOMICALLY (tmp + os.replace) at every swap.  Without it, an
     # incremental merge's target-slice read (`spark.read.parquet(table)`)
     # pays a full InMemoryFileIndex listing of EVERY bucket partition —
@@ -248,8 +292,18 @@ class ScdTable:
     #
     #   { "gen": G,                      -- monotonically increasing commit id
     #     "schema": <json>,
-    #     "buckets": { "<b>": {"paths": [<root-relative paths>], "rows": n} },
+    #     "buckets": { "<b>": {"paths": [<root-relative paths>], "rows": n,
+    #                          "max": {<timestamp column>: <epoch micros>}} },
     #     "superseded": { "<S>": [<paths displaced by commit S>] } }
+    #
+    # ``rows`` and ``max`` come from the footers of the bucket's files
+    # (``_scan_bucket_dir``); ``rows: -1`` and ``max: null`` mean unknown
+    # (an unreadable footer; for ``max`` also an INT96 timestamp column,
+    # which has no statistics, or a LEGACY-rebased file), and a ``max`` value is null for a column
+    # null in every row.  Both are optional: an older entry without them
+    # counts as unknown.  ``rows`` bounds the merge's target slice
+    # (``_slice_row_bound``); ``max`` travels on full reads as
+    # ``_scd_column_max`` and answers ``high_water_mark`` without a job.
     #
     # A merge never mutates or deletes a live file: it writes its rewritten
     # buckets into a fresh immutable `_gen-<G>/` directory (invisible to
@@ -427,7 +481,7 @@ class ScdTable:
         files, stale = self._affected_files(
             manifest, sorted(manifest.get("buckets", {}))
         )
-        return self._leaf_read(files, stale, manifest["schema"])
+        return self._full_read(manifest, files, stale)
 
     def _key_match_cond(self, left_alias: str, right_alias: str):
         """Null-safe business-key equality between two aliased relations —
@@ -585,8 +639,9 @@ class ScdTable:
 
     @staticmethod
     def _scan_bucket_dir(part_dir: str) -> dict | None:
-        """{files, rows} for one bucket partition directory (None if the
-        partition does not exist).  Row counts come from parquet footers
+        """{files, rows, max} for one bucket partition directory (None if
+        the partition does not exist).  Row counts and timestamp-column
+        maxima (see ``_file_maxima``) come from parquet footers
         (driver-local metadata reads, O(files in this bucket))."""
         try:
             names = sorted(
@@ -595,15 +650,32 @@ class ScdTable:
             )
         except OSError:
             return None
-        rows = 0
+        rows, maxima = 0, {}
         try:
             import pyarrow.parquet as pq
 
             for n in names:
-                rows += pq.ParquetFile(os.path.join(part_dir, n)).metadata.num_rows
+                md = pq.ParquetFile(os.path.join(part_dir, n)).metadata
+                rows += md.num_rows
+                file_max = _file_maxima(md)
+                if file_max is None or maxima is None:
+                    maxima = None
+                else:
+                    _merge_maxima(maxima, file_max)
         except Exception:
-            rows = -1  # unknown; files list is still valid
-        return {"files": names, "rows": rows}
+            rows, maxima = -1, None  # unknown; files list is still valid
+        return {"files": names, "rows": rows, "max": maxima}
+
+    @staticmethod
+    def _manifest_entry(paths, src: dict) -> dict:
+        """The one manifest bucket-entry builder: root-relative ``paths``
+        plus the footer facts of ``src`` (a ``_scan_bucket_dir`` result or
+        an existing entry; absent facts are unknown)."""
+        return {
+            "paths": list(paths),
+            "rows": src.get("rows", -1),
+            "max": src.get("max"),
+        }
 
     def _scan_full_manifest(
         self, data_schema_json: str, root: str | None = None
@@ -649,10 +721,9 @@ class ScdTable:
                 prefix = f"{rel_root}/" if rel_root else ""
                 if b in buckets:
                     losers.extend(buckets[b]["paths"])
-                buckets[b] = {
-                    "paths": [f"{prefix}{name}/{n}" for n in entry["files"]],
-                    "rows": entry["rows"],
-                }
+                buckets[b] = self._manifest_entry(
+                    [f"{prefix}{name}/{n}" for n in entry["files"]], entry
+                )
         scan_layer("")
         # Numeric sort by parsed generation — lexicographic dirname order
         # would silently invert newest-wins precedence the day a counter
@@ -697,10 +768,7 @@ class ScdTable:
             return manifest
         buckets: dict[str, dict] = {}
         for b, e in manifest.get("buckets", {}).items():
-            buckets[str(b)] = {
-                "paths": self._entry_paths(b, e),
-                "rows": e.get("rows", -1),
-            }
+            buckets[str(b)] = self._manifest_entry(self._entry_paths(b, e), e)
         for name in os.listdir(self.path):
             if not name.startswith(f"{BUCKET_COL}="):
                 continue
@@ -709,10 +777,9 @@ class ScdTable:
                 continue
             fresh = self._scan_bucket_dir(os.path.join(self.path, name))
             if fresh is not None:
-                buckets[b] = {
-                    "paths": [f"{name}/{n}" for n in fresh["files"]],
-                    "rows": fresh["rows"],
-                }
+                buckets[b] = self._manifest_entry(
+                    [f"{name}/{n}" for n in fresh["files"]], fresh
+                )
         return {
             "gen": 0,
             "buckets": buckets,
@@ -1058,13 +1125,10 @@ class ScdTable:
                 if entry is None:
                     manifest["buckets"].pop(str(b), None)
                 else:
-                    manifest["buckets"][str(b)] = {
-                        "paths": [
-                            f"{gen_rel}/{BUCKET_COL}={b}/{n}"
-                            for n in entry["files"]
-                        ],
-                        "rows": entry["rows"],
-                    }
+                    manifest["buckets"][str(b)] = self._manifest_entry(
+                        [f"{gen_rel}/{BUCKET_COL}={b}/{n}" for n in entry["files"]],
+                        entry,
+                    )
             if displaced:
                 manifest["superseded"][str(gen)] = [
                     os.path.relpath(p, self.path) for p in displaced
@@ -1358,7 +1422,27 @@ class ScdTable:
                 if n.startswith(f"{BUCKET_COL}=")
             }
         files, stale = self._affected_files(manifest, sorted(bucket_ids))
-        return self._leaf_read(files, stale, manifest["schema"])
+        return self._full_read(manifest, files, stale)
+
+    def _full_read(self, manifest: dict, files: list[str], stale: bool) -> DataFrame:
+        """``_leaf_read`` of a whole generation, carrying the table-level
+        timestamp maxima as ``_scd_column_max`` ({column: epoch micros,
+        None when null in every row}) the way ``_scd_row_bound`` travels
+        on the merge slice; ``high_water_mark`` answers from it without a
+        job.  Attached only for a new-style manifest that is not stale and
+        whose every bucket entry has a known ``max``; any transformation
+        of the frame drops it."""
+        df = self._leaf_read(files, stale, manifest["schema"])
+        entries = (manifest.get("buckets") or {}).values()
+        if stale or "gen" not in manifest or any(
+            e.get("max") is None for e in entries
+        ):
+            return df
+        maxima: dict = {}
+        for e in entries:
+            _merge_maxima(maxima, e["max"])
+        df._scd_column_max = maxima
+        return df
 
     def _bucket_expr(self, df: DataFrame, buckets: int | None = None):
         # Stable across runs and engines enough for partitioning: md5 of the
@@ -1634,7 +1718,7 @@ class ScdTable:
         restored_rel: set[str] = set()
         for b, e in (snap.get("buckets") or {}).items():
             rels = self._entry_paths(b, e)
-            restored_buckets[str(b)] = {"paths": rels, "rows": e.get("rows", -1)}
+            restored_buckets[str(b)] = self._manifest_entry(rels, e)
             restored_rel.update(rels)
         missing = sorted(
             r for r in restored_rel

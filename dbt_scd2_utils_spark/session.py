@@ -28,7 +28,17 @@ def get_spark(
     read, JVM calls and a Python stack walk), a cost paid on each of the
     hundreds of Column calls one merge plan makes.  The trade-off: Spark
     errors raised by DataFrame operations lose the Python call-site
-    fragment of their query context.  Python tracebacks are unchanged."""
+    fragment of their query context.  Python tracebacks are unchanged.
+
+    Parquet timestamps are written as ``TIMESTAMP_MICROS``
+    (``spark.sql.parquet.outputTimestampType``; Spark's default is INT96,
+    Delta and Iceberg write INT64 micros too): INT64 columns carry
+    min/max footer statistics, from which a bucketed ``ScdTable`` records
+    per-bucket maxima and answers ``high_water_mark`` without a job.
+    Parquet has no per-write option for this, so it is a session default.
+    The trade-off: on a session this function did not create (``prepare``
+    leaves the setting alone), files stay INT96 and ``high_water_mark``
+    scans the column, as it always did."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     spark = (
@@ -48,6 +58,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .getOrCreate()
     )
     return spark

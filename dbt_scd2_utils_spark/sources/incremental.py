@@ -6,13 +6,17 @@ semantics (``macros/builtin_overrides/is_incremental.sql:18-28``).
 
 The reference's scalar subquery
 ``(select coalesce(max(_loaded_at), '1900-01-01') from target) < loaded_at``
-becomes a driver-side aggregate + a pushed-down filter: the max() is an
-eager aggregate over the target (two Spark jobs under AQE: the partial
-aggregate's shuffle stage, then the final one) that reads every row of the
-``loaded_at`` column.  Column pruning keeps the scan to that one column, but
-Spark's DSv1 parquet source has no aggregate pushdown, so the footers' min/max
-statistics are not used.  The comparison is then a plain literal predicate
-Catalyst pushes into the source's parquet scan.
+becomes a driver-side value + a pushed-down filter.  Snowflake answers the
+max() from micro-partition metadata; here the footers' min/max statistics
+answer it when the target is a full read of a bucketed ``ScdTable``
+(``read()``, ``read_at_gen``, ``read_at_timestamp``) whose manifest records
+every bucket's maxima: no Spark job runs.  Any other target — a transformed
+frame, a legacy or stale manifest, a bucket written with INT96 timestamps
+(no statistics) or under Spark's LEGACY datetime rebase — gets an eager
+aggregate (two Spark jobs under AQE: the partial aggregate's shuffle stage,
+then the final one) that reads every row of the ``loaded_at`` column:
+Spark's DSv1 parquet source has no aggregate pushdown.  The comparison is then a plain literal predicate Catalyst pushes
+into the source's parquet scan.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType, TimestampType
 
 DEFAULT_VALID_FROM = "1900-01-01 00:00:00"
 
@@ -32,10 +37,28 @@ def high_water_mark(
 ):
     """``coalesce(max(loaded_at), default_valid_from)`` over the target —
     source.sql:44.  ``target=None`` (no table yet → initial load) returns the
-    floor directly."""
+    floor directly.
+
+    Zero jobs when ``target`` is a full read of a bucketed ``ScdTable``
+    carrying ``_scd_column_max`` with ``loaded_at_col`` in it: a new-style
+    manifest, not stale, every bucket's footer maxima known (timestamps
+    written as INT64, ``get_spark``'s default) and the column a top-level
+    timestamp of the frame.  The recorded micros are converted with the
+    column's own type, so the value equals the aggregate's, and a column
+    null everywhere gives the floor.  Otherwise the aggregate runs."""
     floor = datetime.fromisoformat(default_valid_from)
     if target is None:
         return floor
+    maxima = getattr(target, "_scd_column_max", None)
+    if maxima is not None and loaded_at_col in maxima:
+        field = next(
+            (f for f in target.schema.fields if f.name == loaded_at_col), None
+        )
+        if field is not None and isinstance(
+            field.dataType, (TimestampType, TimestampNTZType)
+        ):
+            us = maxima[loaded_at_col]
+            return floor if us is None else field.dataType.fromInternal(us)
     row = target.agg(F.max(F.col(loaded_at_col)).alias("hwm")).first()
     return row["hwm"] if row and row["hwm"] is not None else floor
 

@@ -1547,6 +1547,38 @@ def test_manifest_bound_merge_submits_no_jobs(spark, tmp_path):
                                 [CUSTOMERS_RAW[1], CUSTOMERS_RAW[2]]))
 
 
+def test_merge_plans_one_lag_of_the_content_hash(spark, tmp_path):
+    """The run ids and the changes-only filter read one materialized
+    ``lag(_scd2_hash)``: Catalyst extracts every inline occurrence of a
+    window expression into its own window column, so a lag written twice
+    is computed twice.  The bucket-local merge computes it once; the
+    broadcast chain's plan repeats its cached merge source once per
+    reference, and no ``Window`` in it computes the lag twice."""
+    from dbt_scd2_utils_spark import scd2_incremental, scd2_initial_load
+
+    t, probe, _ = _probed_table(spark, str(tmp_path / "lag"))
+    b2 = spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA)
+    t.build(b2)
+    broadcast = scd2_incremental(
+        scd2_initial_load(
+            spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA), CFG
+        ),
+        b2,
+        CFG,
+        broadcast_source=True,
+    )
+    plans = [
+        m._jdf.queryExecution().executedPlan().toString()
+        for m in (probe.results[0], broadcast)
+    ]
+    assert plans[0].count("lag(_scd2_hash") == 1, plans[0]
+    for plan in plans:
+        windows = [ln for ln in plan.splitlines() if "Window [" in ln]
+        assert windows and all(
+            ln.count("lag(_scd2_hash") <= 1 for ln in windows
+        ), plan
+
+
 def _assert_probed_fallback(spark, tmp_path, t, probe):
     out = t.build(spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA))
     assert probe.bounds == [None]
