@@ -16,13 +16,19 @@ persisted by an operator — the caller decides their storage lifetime.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _LIVE_CACHES: list[DataFrame] = []
 
 
 def barrier(df: DataFrame) -> DataFrame:
-    """persist() + register for :func:`release_caches`."""
+    """persist() + register for :func:`release_caches`.  A plan the
+    CacheManager already holds (the same key set looked up again, or a
+    caller's own cache) is returned as is and not registered again, so
+    repeated calls leave one registry entry, not one per call."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     cached = df.persist()
     _LIVE_CACHES.append(cached)
     return cached

@@ -81,7 +81,9 @@ def latest_row_is_current(
     current_col: str = "_is_current",
 ) -> DataFrame:
     """The max-valid_from row per key has _is_current=true (and only it) —
-    test_latest_row_is_current.sql:1-20."""
+    test_latest_row_is_current.sql:1-20.  When the max valid_from is tied
+    within a key, row_number picks an arbitrary one of the tied rows as
+    the latest, as the reference's SQL does."""
     w = Window.partitionBy(*keys).orderBy(F.col(valid_from).desc())
     ranked = df.withColumn("_rn", F.row_number().over(w))
     return ranked.filter(
@@ -97,7 +99,9 @@ def first_record_not_update(
     change_type: str = "_change_type",
 ) -> DataFrame:
     """First record per key is 'I' or 'D', never 'U' —
-    test_first_record_not_update.sql:1-30."""
+    test_first_record_not_update.sql:1-30.  When the min valid_from is
+    tied within a key, row_number picks an arbitrary one of the tied rows
+    as the first, as the reference's SQL does."""
     w = Window.partitionBy(*keys).orderBy(valid_from)
     ranked = df.withColumn("_rn", F.row_number().over(w))
     return ranked.filter(
@@ -171,10 +175,91 @@ def all_records_current(
     return df.filter(F.col(current_col) != True)  # noqa: E712
 
 
+# Checks whose standalone frame depends on the order of a key's rows
+# (row_number, lead, lag over valid_from).  When valid_from ties within a
+# key, or is null, that order is not fixed, so the fused pass below cannot
+# vouch for them.  no_validity_overlaps is not among them: a violating
+# pair has distinct, non-null valid_from values, so the earlier row of the
+# pair precedes the later one in every order.
+_ORDER_DEPENDENT = frozenset({
+    "continuous_validity_windows",
+    "latest_row_is_current",
+    "first_record_not_update",
+    "insert_follows_delete",
+    "no_consecutive_inserts_or_deletes",
+})
+
+
+def _possible_violations(df: DataFrame, cfg: ScdConfig) -> set[str]:
+    """Names of the suite's checks that may have a violating row in
+    ``df``, decided by one query: one window spec over the key (one hash
+    exchange and one sort), then one global aggregate.  A name may be a
+    false positive, never a false negative.  A null flag counts as false,
+    which is exact: every standalone check filters on the same predicate,
+    and a filter drops null."""
+    vf, vt = F.col(cfg.valid_from_column), F.col(cfg.valid_to_column)
+    ct = F.col(cfg.change_type_column)
+    current = F.col(cfg.is_current_column) == True  # noqa: E712
+    w = Window.partitionBy(*cfg.unique_key).orderBy(vf.asc_nulls_first())
+    # Every per-key quantity over the one spec, each computed once (Catalyst
+    # gives every inline occurrence of a window expression its own column).
+    seq = df.select(
+        vf, vt, ct, current.alias("_current"),
+        *([F.col(cfg.deleted_at_column).alias("_deleted_at")]
+          if cfg.deleted_at_column else []),
+        F.row_number().over(w).alias("_rn"),
+        F.lead(vf).over(w).alias("_next_vf"),
+        F.lag(vf).over(w).alias("_prev_vf"),
+        F.lag(ct).over(w).alias("_prev_ct"),
+        F.max(vt).over(w.rowsBetween(Window.unboundedPreceding, -1)).alias("_max_prev_vt"),
+        F.count(F.when(current, 1)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ).alias("_n_current"),
+    )
+    cur, next_vf, prev_ct = F.col("_current"), F.col("_next_vf"), F.col("_prev_ct")
+    flags = {
+        "one_current_per_key": F.col("_n_current") > 1,
+        # superset of the self-join: an earlier window of the key ends
+        # after this one starts (the join also drops null key parts)
+        "no_validity_overlaps": F.col("_max_prev_vt") > vf,
+        "continuous_validity_windows": next_vf.isNotNull() & (vt != next_vf),
+        # without ties or nulls, the last row is the max-valid_from row
+        "latest_row_is_current": F.when(next_vf.isNull(), ~cur).otherwise(cur),
+        "first_record_not_update": (F.col("_rn") == 1) & (ct == "U"),
+        "insert_follows_delete": (prev_ct == "D") & ~ct.isin("I", "D"),
+        "no_consecutive_inserts_or_deletes": ((prev_ct == "I") & (ct == "I"))
+        | ((prev_ct == "D") & (ct == "U")),
+        "valid_window_well_formed": vf.isNull() | vt.isNull() | (vf >= vt),
+    }
+    if cfg.deleted_at_column:
+        flags["no_records_after_deletion"] = (ct == "D") & (vf != F.col("_deleted_at"))
+    unordered = vf.isNull() | (F.col("_prev_vf") == vf)
+    row = seq.agg(
+        *[F.max(c).alias(n) for n, c in flags.items()],
+        F.max(unordered).alias("_unordered"),
+    ).first()
+    return {
+        n for n in flags
+        if row[n] or (row["_unordered"] and n in _ORDER_DEPENDENT)
+    }
+
+
 def scd2_invariant_suite(
     df: DataFrame, cfg: ScdConfig
 ) -> dict[str, DataFrame]:
-    """All SCD2 invariants for a built table, keyed by test name."""
+    """All SCD2 invariants for a built table, keyed by test name.
+
+    Eager: building the suite runs ONE Spark query over ``df``, a single
+    window pass over the key that flags every check that could possibly
+    be violated (the single-pass idea of Deequ, Schelter et al., VLDB
+    2018).  A flagged check returns its standalone function's frame
+    unchanged; any other check returns that frame's ``limit(0)``, which
+    Catalyst plans as an empty local relation, so consuming it scans
+    nothing.  Soundness rule: a flag may be a false positive (it costs
+    the check's own scan), never a false negative, so every returned
+    frame equals the standalone function's output.  Tie rule: a
+    ``valid_from`` tied within a key, or null, gives row_number/lead/lag
+    no fixed order, so it flags every order-dependent check."""
     keys = list(cfg.unique_key)
     vf, vt = cfg.valid_from_column, cfg.valid_to_column
     ct, cur = cfg.change_type_column, cfg.is_current_column
@@ -194,7 +279,11 @@ def scd2_invariant_suite(
         suite["no_records_after_deletion"] = no_records_after_deletion(
             df, keys, cfg.deleted_at_column, vf, ct
         )
-    return suite
+    possible = _possible_violations(df, cfg)
+    return {
+        name: frame if name in possible else frame.limit(0)
+        for name, frame in suite.items()
+    }
 
 
 def store_failures(

@@ -478,6 +478,27 @@ def test_read_keys_prunes_to_affected_buckets(spark, tmp_path):
     _assert_same(got_plain, want)
 
 
+def test_repeated_read_keys_register_one_barrier(spark, tmp_path):
+    """read_keys persists its key set through the shared barrier registry.
+    Looking up the same key frame again finds that plan already cached:
+    N lookups leave one registry entry, not N, and release_caches()
+    leaves none of their persisted RDDs behind."""
+    from dbt_scd2_utils_spark.functions import caching
+
+    t = ScdTable(spark, str(tmp_path / "lookup"), CFG, partition_buckets=4)
+    t.build(spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA))
+    keys = spark.createDataFrame([(1,), (2,)], "customer_id int")
+    caching.release_caches()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(4):
+        assert t.read_keys(keys).count() > 0
+    assert len(caching._LIVE_CACHES) == 1
+    assert set(jsc.getPersistentRDDs().keySet()) - before, "the key set was cached"
+    assert caching.release_caches() == 1
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_read_at_timestamp_boundaries(spark, tmp_path):
     """TIMESTAMP AS OF twin of read_at_gen: resolves the latest retained
     generation with committed_at <= ts.  Boundaries: the exact commit
