@@ -225,7 +225,7 @@ def main() -> None:
     # not the one-time initial build of the target table it reads.
     entry_mod.prewarm_merge_targets(spark, sf_dir)
     # Train-once indexes (PQ codebooks, BPE merge table) — the recurring
-    # query cost is encode+probe; see entry._INDEX_CACHE.
+    # query cost is encode+probe; see the index memos in entry.py.
     entry_mod.prewarm_indexes(spark, sf_dir)
     # Streaming gates: stage source files + persisted index artifacts once
     # (the on-disk inputs a deployment's stream starts from); the timed

@@ -116,7 +116,7 @@ from .plans.oracles import (
     scd2_initial_load_sql,
     scd2_join_sql,
 )
-from .functions.caching import barrier as _qcache
+from .functions.caching import barrier, memo, release, staging_dir
 from .session import prepare
 from .sources.incremental import high_water_mark
 from .sources.tables import load_table, write_bucketed_table
@@ -215,22 +215,6 @@ from events
 
 _STREAM_BUILDERS: dict = {}
 
-# Every directory the query layer stages into (the memos' streaming stages,
-# staged merge targets, bucketed gate tables and DSIR ratio artifact, and
-# the one-shot JSONL, date-partitioned and failure-record queries' dirs):
-# release_entry_caches() removes them with the memos that point at them.
-_STAGED_DIRS: list[str] = []
-
-
-def _staging_dir(prefix: str) -> str:
-    """A fresh temp dir for a memo or a query's written input, recorded
-    for release."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    _STAGED_DIRS.append(d)
-    return d
-
 
 def _stream_builder(name: str):
     """Register a staging builder under ``name`` (see _stream_stage)."""
@@ -248,20 +232,20 @@ def _stream_stage(spark: SparkSession, sf_dir: str, name: str) -> str:
     The registered builder populates the dir ONCE per (session, sf_dir)
     with the stream's source files and any persisted index artifacts — the
     inputs a real deployment already has on disk when the stream starts
-    (the same split ``_staged_target``/``_INDEX_CACHE`` draw: staging was
+    (the same split ``_staged_target``/the index memos draw: staging was
     previous runs' cost; the stream drive + probe is this query's —
     ``prewarm_stream_stages`` lets bench.py build them outside timing).
     Output and checkpoint dirs stay per-invocation fresh — root them under
     ``base`` via :func:`_fresh_dirs` so repeated runs recycle one /tmp
     tree instead of accumulating (the ADVICE r12 hygiene, generalized from
     q_streaming_scd2_bucketed to every streaming gate)."""
-    key = (spark, sf_dir, "stream_stage", name)
-    base = _INDEX_CACHE.get(key)
-    if base is None:
-        base = _staging_dir(f"scd_stream_{name}_")
+
+    def build() -> str:
+        base = staging_dir(f"scd_stream_{name}_")
         _STREAM_BUILDERS[name](spark, sf_dir, base)
-        _INDEX_CACHE[key] = base
-    return base
+        return base
+
+    return memo((spark, sf_dir, "stream_stage", name), build)
 
 
 def prewarm_stream_stages(spark: SparkSession, sf_dir: str) -> None:
@@ -439,7 +423,7 @@ def q_scd2_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: the diff reads the table twice (one pruned scan per
     # snapshot); without the barrier the whole window-chain build would
     # execute twice.
-    built = _qcache(scd2_initial_load(change_feed(spark, sf_dir), SCD2_CFG))
+    built = barrier(scd2_initial_load(change_feed(spark, sf_dir), SCD2_CFG))
     return scd2_diff(
         built, SPLIT, VALID_TO_PROBE, ["user_id"],
         ("event_type", "value", "props", "deleted_at"),
@@ -454,15 +438,10 @@ def q_scd2_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # call in a fresh process still stages both halves end-to-end (correctness
 # gate unchanged) while repeated calls — and the bench, after
 # prewarm_merge_targets — measure the merge alone.
-_MERGE_TARGET_CACHE: dict = {}
-
-
 def _staged_target(
     spark: SparkSession, sf_dir: str, cfg: ScdConfig, variant: str
 ) -> DataFrame:
-    key = (spark, sf_dir, variant)
-    tgt = _MERGE_TARGET_CACHE.get(key)
-    if tgt is None:
+    def build() -> DataFrame:
         b1, _ = _split(change_feed(spark, sf_dir))
         # Materialize to parquet and read back (not persist()): a stored
         # table is a LEAF scan, so every consuming merge plans against a
@@ -473,11 +452,11 @@ def _staged_target(
         # (guide §3.3/§7.3), and target-slice filters now push down to the
         # scan.  This is also what a real incremental run reads: the
         # persisted output of the previous run.
-        base = _staging_dir(f"scd_target_{variant}_")
+        base = staging_dir(f"scd_target_{variant}_")
         scd2_initial_load(b1, cfg).coalesce(8).write.parquet(f"{base}/t")
-        tgt = spark.read.parquet(f"{base}/t")
-        _MERGE_TARGET_CACHE[key] = tgt
-    return tgt
+        return spark.read.parquet(f"{base}/t")
+
+    return memo((spark, sf_dir, "staged_target", variant), build)
 
 
 def prewarm_merge_targets(spark: SparkSession, sf_dir: str) -> None:
@@ -506,11 +485,15 @@ def prewarm_merge_targets(spark: SparkSession, sf_dir: str) -> None:
 # Build-once-probe-many indexes (same deployment semantics the IVF path
 # documents via save_centroids/load_centroids): training a PQ codebook or a
 # BPE merge table is the BUILD step a real pipeline runs once and persists;
-# the recurring per-query cost is encode+probe.  The session cache mirrors
-# that split; bench.py prewarms it so the timed number measures the probe.
+# the recurring per-query cost is encode+probe.  The session memos mirror
+# that split; bench.py prewarms them so the timed number measures the probe.
 # The driver's correctness gate runs cold (build + probe) — only slower,
 # never different: the builders are bit-deterministic.
-_INDEX_CACHE: dict = {}
+def _built(df: DataFrame) -> DataFrame:
+    """A memoized index artifact, persisted and materialized now."""
+    df = barrier(df)
+    df.count()
+    return df
 
 
 def _pq_books(spark: SparkSession, sf_dir: str, subset: str = "full"):
@@ -519,16 +502,13 @@ def _pq_books(spark: SparkSession, sf_dir: str, subset: str = "full"):
     phase — a second build-once index, same deployment semantics."""
     from .operators.similarity import pq_codebooks
 
-    key = (spark, sf_dir, "pq_books", subset)
-    books = _INDEX_CACHE.get(key)
-    if books is None:
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         if subset == "base":
             emb = emb.filter(F.col("vec_id") % 5 != 0)
-        books = pq_codebooks(emb, dim=64, m=8, ksub=16).persist()
-        books.count()
-        _INDEX_CACHE[key] = books
-    return books
+        return _built(pq_codebooks(emb, dim=64, m=8, ksub=16))
+
+    return memo((spark, sf_dir, "pq_books", subset), build)
 
 
 def _pq_books_graph(spark: SparkSession, sf_dir: str):
@@ -542,20 +522,9 @@ def _pq_books_graph(spark: SparkSession, sf_dir: str):
     build count)."""
     from .operators.similarity import pq_codebooks
 
-    key = (spark, sf_dir, "pq_books_graph")
-    books = _INDEX_CACHE.get(key)
-    if books is None:
-        books = pq_codebooks(
-            emb_corpus(spark, sf_dir),
-            dim=64,
-            m=8,
-            ksub=16,
-            id_col="vec_id",
-            vec_col="v",
-        ).persist()
-        books.count()
-        _INDEX_CACHE[key] = books
-    return books
+    return memo((spark, sf_dir, "pq_books_graph"), lambda: _built(pq_codebooks(
+        emb_corpus(spark, sf_dir), dim=64, m=8, ksub=16, id_col="vec_id", vec_col="v",
+    )))
 
 
 def _ivf_coarse(spark: SparkSession, sf_dir: str, subset: str = "full"):
@@ -568,9 +537,7 @@ def _ivf_coarse(spark: SparkSession, sf_dir: str, subset: str = "full"):
         kmeans_centroids,
     )
 
-    key = (spark, sf_dir, "ivf_coarse", subset)
-    coarse = _INDEX_CACHE.get(key)
-    if coarse is None:
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         if subset == "base":
             emb = emb.filter(F.col("vec_id") % 5 != 0)
@@ -578,12 +545,9 @@ def _ivf_coarse(spark: SparkSession, sf_dir: str, subset: str = "full"):
             F.col("vec_id").alias("pid"),
             _l2_normalize(as_double("embedding")).alias("nv"),
         )
-        coarse = kmeans_centroids(
-            normed, k=8, iters=2, id_col="pid", vec_col="nv"
-        ).persist()
-        coarse.count()
-        _INDEX_CACHE[key] = coarse
-    return coarse
+        return _built(kmeans_centroids(normed, k=8, iters=2, id_col="pid", vec_col="nv"))
+
+    return memo((spark, sf_dir, "ivf_coarse", subset), build)
 
 
 def _ivf_pq_encoded(spark: SparkSession, sf_dir: str, subset: str = "full"):
@@ -593,22 +557,19 @@ def _ivf_pq_encoded(spark: SparkSession, sf_dir: str, subset: str = "full"):
     base-trained artifacts (the ann_ivf_pq_append stale phase)."""
     from .operators.similarity import ivf_pq_encode
 
-    key = (spark, sf_dir, "ivf_pq_encoded", subset)
-    enc = _INDEX_CACHE.get(key)
-    if enc is None:
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         if subset == "base":
             emb = emb.filter(F.col("vec_id") % 5 != 0)
-        enc = ivf_pq_encode(
+        return _built(ivf_pq_encode(
             emb,
             dim=64,
             coarse=_ivf_coarse(spark, sf_dir, subset),
             codebooks=_pq_books(spark, sf_dir, subset),
             m=8,
-        ).persist()
-        enc.count()
-        _INDEX_CACHE[key] = enc
-    return enc
+        ))
+
+    return memo((spark, sf_dir, "ivf_pq_encoded", subset), build)
 
 
 def _dsir_gate_ratio(spark: SparkSession, sf_dir: str):
@@ -617,64 +578,25 @@ def _dsir_gate_ratio(spark: SparkSession, sf_dir: str):
     (session, sf_dir), score every micro-batch against the FIXED table."""
     from .operators.dsir import dsir_ratio
 
-    key = (spark, sf_dir, "dsir_gate_ratio")
-    ratio = _INDEX_CACHE.get(key)
-    if ratio is None:
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        ratio = _qcache(
-            dsir_ratio(docs, docs.filter(F.col("lang") == "en"))
-        )
-        _INDEX_CACHE[key] = ratio
-    return ratio
+        return barrier(dsir_ratio(docs, docs.filter(F.col("lang") == "en")))
+
+    return memo((spark, sf_dir, "dsir_gate_ratio"), build)
 
 
 def _bpe_learned(spark: SparkSession, sf_dir: str, n_merges: int = 10):
     from .operators.bpe import _learn
 
-    key = (spark, sf_dir, "bpe", n_merges)
-    got = _INDEX_CACHE.get(key)
-    if got is None:
-        got = _learn(
-            load_table(spark, sf_dir, "documents"), n_merges, "text"
-        )
-        _INDEX_CACHE[key] = got
-    return got
-
-
-def release_entry_caches() -> int:
-    """Free EVERY cache the query layer holds: the per-query barriers
-    (functions/caching.release_caches) plus the session memo caches
-    (_MERGE_TARGET_CACHE, _INDEX_CACHE — the build-once index/target
-    artifacts) and the staging directories the memos wrote
-    (``_staging_dir``).  After this a long-lived Spark session is back to
-    zero executor storage and zero staged directories; the next query call
-    simply rebuilds its memos.  Returns how many cached relations were
-    released."""
-    import shutil
-
-    from .functions.caching import release_caches
-
-    n = release_caches()
-    for memo in (_MERGE_TARGET_CACHE, _INDEX_CACHE):
-        for v in memo.values():
-            try:
-                dfs = v if isinstance(v, tuple) else (v,)
-                for df in dfs:
-                    if hasattr(df, "unpersist"):
-                        df.unpersist()
-                        n += 1
-            except Exception:
-                pass  # session already stopped
-        memo.clear()
-    for d in _STAGED_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _STAGED_DIRS.clear()
-    return n
+    return memo(
+        (spark, sf_dir, "bpe", n_merges),
+        lambda: _learn(load_table(spark, sf_dir, "documents"), n_merges, "text"),
+    )
 
 
 def prewarm_indexes(spark: SparkSession, sf_dir: str) -> None:
     """Train the PQ codebooks and the BPE merge table outside bench
-    timing (called by bench.py; see _INDEX_CACHE)."""
+    timing (called by bench.py; see the index memos above)."""
     prepare(spark)
     _pq_books(spark, sf_dir)
     _pq_books(spark, sf_dir, "base")
@@ -765,7 +687,7 @@ def q_scd2_incremental_update_all_false(spark: SparkSession, sf_dir: str) -> Dat
             update_all_previous_records=False, collapse_redundant_versions=False
         )
         b1, b2 = _split(change_feed(spark, sf_dir))
-        target = _qcache(scd2_initial_load(b1, cfg))
+        target = barrier(scd2_initial_load(b1, cfg))
         return scd2_incremental(target, b2, cfg)
 
 
@@ -906,7 +828,7 @@ def q_scd2_incremental_predicates(spark: SparkSession, sf_dir: str) -> DataFrame
             incremental_predicates=("_is_current = true",),
         )
         b1, b2 = _split(change_feed(spark, sf_dir))
-        target = _qcache(scd2_initial_load(b1, cfg))
+        target = barrier(scd2_initial_load(b1, cfg))
         return scd2_incremental(target, b2, cfg)
 
 
@@ -975,25 +897,27 @@ def q_scd2_sequence_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior = spark.conf.get(_ccp, "false")
     spark.conf.set(_ccp, "true")
     try:
-        state = scd2_initial_load(batch(1), SEQ_CFG)
+        cut = state = scd2_initial_load(batch(1), SEQ_CFG)
         for i in range(2, 7):
             # Materialize between iterations like a table write (bounded:
             # the seed state is ~60 rows; a real deployment reads the
             # persisted target table here, cf. _staged_target).
-            # localCheckpoint(eager) executes the iteration's merge and
+            # An eager local checkpoint executes the iteration's merge and
             # leaves a leaf plan, like the previous collect()+
             # createDataFrame() roundtrip, but the rows stay in the JVM —
             # no driver collect, no Python re-serialization, no
             # 32-slice parallelized scan per downstream reference
             # (guide §5: localCheckpoint is the cheap lineage cut).
-            # A/B (repeat-3 medians): 12.5 s -> ~8 s.
-            state = state.localCheckpoint(eager=True)
+            # A/B (repeat-3 medians): 12.5 s -> ~8 s.  The previous
+            # iteration's checkpoint is dead once this one exists.
+            prev, cut = cut, barrier(state, checkpoint=True)
+            release(prev)
             # broadcast_source=True skips the eager broadcast-sizing
             # count (operators/scd2.py:374) — these batches are <=37
             # rows, always broadcast; one fewer synchronous job per
             # iteration (~2 s over the six; output proven bit-equal).
             state = scd2_incremental(
-                state, batch(i), SEQ_CFG, broadcast_source=True
+                cut, batch(i), SEQ_CFG, broadcast_source=True
             )
     finally:
         spark.conf.set(_ccp, prior)
@@ -1204,10 +1128,8 @@ def _bucketed_scd_table(spark: SparkSession, sf_dir: str, variant: str):
     table already EXISTS; staging it was previous runs' cost."""
     from .plans.build import ScdTable
 
-    key = (spark, sf_dir, "scd_table", variant)
-    t = _INDEX_CACHE.get(key)
-    if t is None:
-        base = _staging_dir(f"scd_gate_{variant}_")
+    def build():
+        base = staging_dir(f"scd_gate_{variant}_")
         # The restore gate re-restores generation 0 on EVERY invocation
         # (each one a new commit), so its table needs gen 0 retained far
         # past the default window for repeated gate/bench runs.
@@ -1224,8 +1146,9 @@ def _bucketed_scd_table(spark: SparkSession, sf_dir: str, variant: str):
         else:
             t.build(b1)   # gen 0
         t.build(b2)   # gen 1
-        _INDEX_CACHE[key] = t
-    return t
+        return t
+
+    return memo((spark, sf_dir, "scd_table", variant), build)
 
 
 def q_scd2_read_at_gen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1529,8 +1452,8 @@ def _view_purchase_rels(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     # persisted: each relation feeds BOTH the spine union and its
     # containment join (stored SCD2 tables in a real deployment)
     return [
-        _qcache(scd2_initial_load(view, cfg)),
-        _qcache(scd2_initial_load(purch, cfg)),
+        barrier(scd2_initial_load(view, cfg)),
+        barrier(scd2_initial_load(purch, cfg)),
     ]
 
 
@@ -1640,7 +1563,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.formats import CORRUPT_COL, read_jsonl, write_jsonl
 
     ev = load_table(spark, sf_dir, "events")
-    path = _staging_dir("scd_jsonl_") + "/events"
+    path = staging_dir("scd_jsonl_") + "/events"
     write_jsonl(ev, path)
     return read_jsonl(spark, path, ev.schema).drop(CORRUPT_COL)
 
@@ -1654,7 +1577,7 @@ def q_events_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.formats import read_date_partition, write_date_partitioned
 
     ev = load_table(spark, sf_dir, "events")
-    path = _staging_dir("scd_part_") + "/events"
+    path = staging_dir("scd_part_") + "/events"
     write_date_partitioned(ev, path)
     return read_date_partition(spark, path, "2024-01-16").select(
         "event_id", "user_id", "event_type", "value",
@@ -1723,10 +1646,10 @@ def q_invariant_store_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from .operators.invariants import one_current_per_key, store_failures
 
-    built = _qcache(scd2_initial_load(change_feed(spark, sf_dir), SCD2_CFG))
+    built = barrier(scd2_initial_load(change_feed(spark, sf_dir), SCD2_CFG))
     dup = built.filter((F.col("user_id") == 0) & F.col("_is_current"))
     corrupted = built.unionByName(dup)
-    base = _staging_dir("scd_failures_")
+    base = staging_dir("scd_failures_")
     counts = store_failures(
         {"one_current_per_key": one_current_per_key(corrupted, ["user_id"])},
         base,
@@ -1742,7 +1665,7 @@ def q_invariant_one_current_per_key(spark: SparkSession, sf_dir: str) -> DataFra
     the check FINDS them — the oracle corrupts identically
     (reference tests/generic/test_one_current_per_key.sql:3-9)."""
     prepare(spark)
-    built = _qcache(scd2_initial_load(change_feed(spark, sf_dir), SCD2_CFG))
+    built = barrier(scd2_initial_load(change_feed(spark, sf_dir), SCD2_CFG))
     dup = built.filter((F.col("user_id") % 100 == 0) & F.col("_is_current"))
     return one_current_per_key(built.unionByName(dup), ["user_id"])
 
@@ -1755,7 +1678,7 @@ def q_invariant_no_validity_overlaps(spark: SparkSession, sf_dir: str) -> DataFr
     (reference tests/generic/test_no_validity_overlaps.sql:10-17)."""
     prepare(spark)
     # persisted: both sides of the self theta-join read the built table
-    built = _qcache(scd2_initial_load(change_feed(spark, sf_dir), SCD2_CFG))
+    built = barrier(scd2_initial_load(change_feed(spark, sf_dir), SCD2_CFG))
     bad = built.filter(
         (F.col("user_id") % 100 == 0) & F.col("_is_current")
     ).withColumn("_valid_from", F.col("_valid_from") - F.expr("interval 1 hour"))
@@ -1918,7 +1841,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the train split — the assembled shape of a real training-data
     pipeline, oracle-checked as one composed query."""
     prepare(spark)
-    corpus = _qcache(doc_corpus(spark, sf_dir))
+    corpus = barrier(doc_corpus(spark, sf_dir))
     stats = text_stats(corpus)
     clusters = dedup_clusters(corpus, minhash_lsh_pairs(corpus))
     split = hash_split(corpus)
@@ -1973,7 +1896,7 @@ def q_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same *_sql builders over the same CTE chain."""
     prepare(spark)
     corpus = _planted(doc_corpus(spark, sf_dir))
-    clean = _qcache(scrub_pii(corpus).select(
+    clean = barrier(scrub_pii(corpus).select(
         "doc_id", F.col("scrubbed_text").alias("text"), "n_emails"
     ))
     rep = repetition_stats(clean)
@@ -2034,7 +1957,7 @@ def q_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .distinct()
     )
-    kept = _qcache(
+    kept = barrier(
         gated.select("doc_id")
         .join(leaks, "doc_id", "left_anti")
         .join(docs.select("doc_id", "source"), "doc_id")
@@ -2072,7 +1995,7 @@ def q_curation_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = doc_corpus(spark, sf_dir)
     canon_ids = normalized_exact_dedup(corpus).select("doc_id")
-    canon = _qcache(corpus.join(canon_ids, "doc_id", "left_semi"))
+    canon = barrier(corpus.join(canon_ids, "doc_id", "left_semi"))
     scored = quality_classifier(canon)
     surv = dedup_survivors(
         scored.select("doc_id", "p_micro"),
@@ -2233,14 +2156,12 @@ def q_dsir_score_loaded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted ratio table instead of training + writing a fresh
     # /tmp/scd_dsir_ratio_* dir per invocation (r11 judge nit) — and the
     # memo matches the deployment story: train once, ship, score anywhere.
-    key = (spark, sf_dir, "dsir_ratio_artifact")
-    path = _INDEX_CACHE.get(key)
-    if path is None:
-        ratio = dsir_ratio(docs, docs.filter(F.col("lang") == "en"))
-        path = _staging_dir("scd_dsir_ratio_") + "/ratio"
-        save_dsir_ratio(ratio, path)
-        _INDEX_CACHE[key] = path
-    loaded = load_dsir_ratio(spark, path)
+    def build() -> str:
+        path = staging_dir("scd_dsir_ratio_") + "/ratio"
+        save_dsir_ratio(dsir_ratio(docs, docs.filter(F.col("lang") == "en")), path)
+        return path
+
+    loaded = load_dsir_ratio(spark, memo((spark, sf_dir, "dsir_ratio_artifact"), build))
     return dsir_score(docs, loaded)
 
 
@@ -2420,7 +2341,7 @@ def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = _qcache(docs.filter(F.col("doc_id") % 10 != 7))
+    corpus = barrier(docs.filter(F.col("doc_id") % 10 != 7))
 
     # The persisted corpus index is the build-once artifact the stream
     # probes (save/load round-trip still exercised — the loaded index is

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.caching import barrier, release
+
 END_MARK = "</w>"
 
 # Default driver-memory bound on the collected (word, freq) table.  A
@@ -241,10 +243,12 @@ def learn_bpe_merges_distributed(
 def _learn_distributed(
     df: DataFrame, n_merges: int, text_col: str
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    state = (
-        _word_vocab(df, text_col)
-        .select("w", "freq", F.expr(_CHARS).alias("syms"))
-        .localCheckpoint()
+    # Each round's state is a checkpoint barrier (a leaf plan, not an
+    # ever-deeper lineage); the previous round's is released once the new
+    # one exists, so one state is live at a time.
+    state = barrier(
+        _word_vocab(df, text_col).select("w", "freq", F.expr(_CHARS).alias("syms")),
+        checkpoint=True,
     )
     wl = Window.partitionBy("w").orderBy("pos")
     wrun = wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -253,12 +257,11 @@ def _learn_distributed(
         # persisted: consumed twice per round (the argmax count and the
         # merge application) — without the barrier the explode+window
         # recomputes and each round costs ~2× its data pass
-        ex = (
+        ex = barrier(
             state.select(
                 "w", "freq", F.posexplode("syms").alias("pos", "sym")
             )
             .withColumn("nxt", F.lead("sym").over(wl))
-            .persist()
         )
         best = (
             ex.filter(F.col("nxt").isNotNull())
@@ -269,7 +272,7 @@ def _learn_distributed(
             .collect()
         )
         if not best:
-            ex.unpersist()
+            release(ex)
             break
         left, right, cnt = best[0]["sym"], best[0]["nxt"], int(best[0]["cnt"])
         merges.append((rank, left, right, cnt))
@@ -302,7 +305,7 @@ def _learn_distributed(
                 ),
             )
         )
-        state = (
+        prev, state = state, barrier(
             t.filter(F.col("tok").isNotNull())
             .groupBy("w", "freq")
             .agg(
@@ -310,10 +313,11 @@ def _learn_distributed(
                     F.array_sort(F.collect_list(F.struct("pos", "tok"))),
                     lambda s: s["tok"],
                 ).alias("syms")
-            )
-            .localCheckpoint()
+            ),
+            checkpoint=True,
         )
-        ex.unpersist()
+        release(ex)
+        release(prev)
     return merges, state
 
 

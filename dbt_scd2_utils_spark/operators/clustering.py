@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.caching import barrier, release
+
 
 def _edge_sig(edges: DataFrame) -> tuple:
     """(count, Σa, Σb) — stationary iff the round changed nothing."""
@@ -65,25 +67,25 @@ def connected_components(
     a guard only: O(log² n) rounds suffice even on path graphs, and the
     loop exits as soon as a round changes nothing.
     """
-    # localCheckpoint (eager) both materializes and truncates lineage —
+    # A checkpoint barrier both materializes and truncates lineage —
     # without it each round appends joins onto an ever-deeper plan and
-    # analysis cost grows quadratically.  On a cluster with a checkpoint
-    # dir, checkpoint() gives the same barrier with durability.
+    # analysis cost grows quadratically.  Each round releases the previous
+    # round's edge set, so one edge set is live at a time.
     # Checkpointing `sym` ONCE matters: `nodes` and `edges` both derive
     # from it, and without the shared barrier the upstream pair pipeline
     # (e.g. a full knn-graph build) would be computed twice.
-    sym = (
+    sym = barrier(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .unionByName(
             pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b"))
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        checkpoint=True,
     )
     nodes = sym.select(F.col("a").alias("id")).distinct()
     # Canonical orientation: one row per undirected edge, larger id first;
     # self-loops contribute nodes (above) but no connectivity.
-    edges = sym.filter(F.col("a") > F.col("b")).localCheckpoint()
+    edges = barrier(sym.filter(F.col("a") > F.col("b")), checkpoint=True)
     sig = _edge_sig(edges)
     for _ in range(max_iter):
         if sig[0] == 0:
@@ -114,14 +116,15 @@ def connected_components(
         # instead of twice (per round: 2 checkpoint writes + 1 sig action
         # -> 1 + 1; at scale, half the per-round edge-set I/O).
         smin = ls.groupBy("a").agg(F.min("b").alias("m"))
-        edges = (
+        prev, edges = edges, barrier(
             ls.join(smin, "a")
             .filter(F.col("b") != F.col("m"))
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .unionByName(smin.select("a", F.col("m").alias("b")))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            checkpoint=True,
         )
+        release(prev)
         new_sig = _edge_sig(edges)
         if new_sig == sig:
             break

@@ -211,7 +211,10 @@ def _possible_violations(df: DataFrame, cfg: ScdConfig) -> set[str]:
         F.lead(vf).over(w).alias("_next_vf"),
         F.lag(vf).over(w).alias("_prev_vf"),
         F.lag(ct).over(w).alias("_prev_ct"),
-        F.max(vt).over(w.rowsBetween(Window.unboundedPreceding, -1)).alias("_max_prev_vt"),
+        # rows with a null valid_from sort first but never join
+        F.max(F.when(vf.isNotNull(), vt)).over(
+            w.rowsBetween(Window.unboundedPreceding, -1)
+        ).alias("_max_prev_vt"),
         F.count(F.when(current, 1)).over(
             w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         ).alias("_n_current"),

@@ -74,6 +74,7 @@ from ..functions.audit import (
     valid_from_expr,
     valid_to_expr,
 )
+from ..functions.caching import barrier
 from ..functions.hashing import surrogate_key
 from ..plans.config import ScdConfig
 
@@ -415,7 +416,7 @@ def build_scd2_merge_source(
     # versions only) output keeps the target scan count at one for the whole
     # merge-source derivation — the reference gets the same effect from its
     # materialized temp table (scd_plan.sql:81-83).
-    prev = previous_records(target, new_records, cfg, check_cols).persist()
+    prev = barrier(previous_records(target, new_records, cfg, check_cols))
 
     select_cols = (
         business_cols + [SOURCE_COL, PRIORITY_COL, KEY_COL, HASH_COL]
@@ -626,7 +627,9 @@ def scd2_incremental(
     touches too many keys to broadcast (the backfill-the-world case).  The
     count materializes the persisted source the downstream action needs
     anyway, but its jobs run eagerly, ahead of the caller's write.  Pass
-    True/False to force either shape.
+    True/False to force either shape.  The persisted previous records and
+    source are ``functions.caching`` barriers: a sink's write scope frees
+    them at commit; outside one, ``release_caches()`` does.
 
     A bucketed ``ScdTable`` merge attaches ``_scd_row_bound`` to the target
     slice it passes in: the slice's manifest row count plus the batch's row
@@ -660,7 +663,7 @@ def scd2_incremental(
     )
     # The merge source (delta-sized) feeds both the broadcast join and the
     # inserts anti-join — persist so its window chain runs once.
-    source = source.persist()
+    source = barrier(source)
     if broadcast_source is None:
         broadcast_source = (
             row_bound is not None and row_bound <= broadcast_max_rows
@@ -735,11 +738,4 @@ def scd2_incremental(
     result = resolved.unionByName(inserts)
     if tgt_out is not None:
         result = result.unionByName(tgt_out.select(*[F.col(c) for c in all_cols]))
-    # Hand the persisted intermediates to the caller: once the result has
-    # been materialized (written/collected) they are dead weight in the
-    # CacheManager — and worse, after a sink swap deletes their input files,
-    # any later refreshByPath re-lists the dead plans (observed as
-    # "deleted very recently" listing warnings).  ScdTable and the streaming
-    # sink unpersist them post-write via this attribute.
-    result._scd_intermediates = [source, prev]
     return result

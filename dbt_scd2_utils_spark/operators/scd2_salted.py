@@ -60,6 +60,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.caching import barrier
 from ..plans.config import ScdConfig
 from .scd2 import (
     HASH_COL,
@@ -92,26 +93,6 @@ class SaltedKeyWindows(KeyWindows):
         if salts < 2:
             raise ValueError("salts must be >= 2")
         self.salts = salts
-        # Persisted stage intermediates: the ghost mechanism references its
-        # input three times (rows + two boundary extracts) and the chain
-        # stacks three such stages, so WITHOUT barriers the upstream plan
-        # re-executes multiplicatively (measured: seconds at 30 rows,
-        # unbounded at scale).  The wrappers hand this list to the caller
-        # via the result's ``_scd_intermediates`` for post-materialization
-        # release (same protocol as scd2_incremental's source/prev).
-        self.cached: list[DataFrame] = []
-
-    def _barrier(self, df: DataFrame) -> DataFrame:
-        # Eager localCheckpoint: materializes AND truncates lineage.  A
-        # persist-only barrier stops recomputation but keeps the full
-        # logical plan, which here grows ~3x per stacked stage (ghosting
-        # references its input three times) — measured driver-heap OOM
-        # from plan tree strings at toy sizes.  Same trade as
-        # clustering.py:68-82; a cluster deployment with a checkpoint dir
-        # can swap in checkpoint() for durability.
-        out = df.localCheckpoint()
-        self.cached.append(out)
-        return out
 
     # -- machinery --------------------------------------------------------
 
@@ -152,10 +133,19 @@ class SaltedKeyWindows(KeyWindows):
         keys = list(cfg.unique_key)
         w = Window.partitionBy(*keys, SALT_COL).orderBy(*order)
         wp = Window.partitionBy(*keys, SALT_COL)
-        marked = self._barrier(
+        # Checkpoint barrier: the ghost mechanism references its input
+        # three times (rows + two boundary extracts) and the chain stacks
+        # three such stages, so without a barrier the upstream plan
+        # re-executes multiplicatively (measured: seconds at 30 rows,
+        # unbounded at scale).  A persist stops recomputation but keeps
+        # the logical plan, which grows ~3x per stacked stage — measured
+        # driver-heap OOM from plan tree strings at toy sizes — so the
+        # barrier also truncates lineage (same trade as clustering.py).
+        marked = barrier(
             salted.withColumn("_rn", F.row_number().over(w)).withColumn(
                 "_cnt", F.count(F.lit(1)).over(wp)
-            )
+            ),
+            checkpoint=True,
         )
         tiny = Window.partitionBy(*keys).orderBy(F.col(SALT_COL))
         preds = (
@@ -417,34 +407,26 @@ def scd2_initial_load_salted(
     strategy; exact same output (SCD2 is per-key independent)."""
     cfg = cfg.validate()
     _require_orderable_updated_at(df, cfg)
-    own_hot = hot_keys is None
-    if own_hot:
-        # Eager localCheckpoint (not a persist barrier): the key set feeds
-        # four joins below (two semi, two anti, each broadcasting it), and
-        # under a persist the full detection lineage re-ANALYZES at every
+    if hot_keys is None:
+        # Checkpoint barrier (not a persist): the key set feeds four joins
+        # below (two semi, two anti, each broadcasting it), and under a
+        # persist the full detection lineage re-ANALYZES at every
         # reference — multiplied again by each downstream re-reference of
         # the split sides, the dominant cost of the salted chain at bench
         # scale was driver plan analysis, not execution.  A leaf plan cuts
         # that multiplicatively; the materialization job replaces the
         # emptiness probe the persist path paid anyway (same trade as
-        # SaltedKeyWindows._barrier above).
-        hot_keys = detect_hot_keys(
-            df.select(*cfg.unique_key), cfg, hot_key_threshold
-        ).localCheckpoint()
+        # SaltedKeyWindows._ghosted).
+        hot_keys = barrier(
+            detect_hot_keys(df.select(*cfg.unique_key), cfg, hot_key_threshold),
+            checkpoint=True,
+        )
     if not hot_keys.limit(1).count():
-        if own_hot:
-            hot_keys.unpersist()
         return scd2_initial_load(df, cfg)
     hot_df, norm_df = _split(df, cfg, hot_keys)
-    strat = SaltedKeyWindows(salts)
-    out = scd2_initial_load(norm_df, cfg).unionByName(
-        scd2_initial_load(hot_df, cfg, windows=strat)
+    return scd2_initial_load(norm_df, cfg).unionByName(
+        scd2_initial_load(hot_df, cfg, windows=SaltedKeyWindows(salts))
     )
-    # Hand the strategy's checkpointed stage intermediates to the caller's
-    # release hook (ScdTable/_release_intermediates) — their storage blocks
-    # are dead weight once the result is materialized.
-    out._scd_intermediates = strat.cached + ([hot_keys] if own_hot else [])
-    return out
 
 
 def scd2_incremental_salted(
@@ -467,7 +449,15 @@ def scd2_incremental_salted(
     tuple per call — observability for the adaptive default
     (:func:`scd2_incremental_adaptive`) and its routing pins; the hot
     path is untouched when it is None (the salted branch pays one extra
-    count over the already-persisted, few-row hot-key set)."""
+    count over the already-materialized, few-row hot-key set).
+
+    The hot-key set and the salted chain's stage barriers are LOCAL
+    checkpoints (``functions.caching.barrier(..., checkpoint=True)``):
+    their blocks live on the executors that computed them and their
+    lineage is cut, so the result cannot be recomputed after one of those
+    executors is lost — the query fails instead.  They are released when
+    the enclosing scope closes (a sink's write) or by
+    ``release_caches()``; the result must not run again after that."""
     cfg = cfg.validate()
     _require_orderable_updated_at(batch, cfg)
     # The target's column participates in the same windows after the
@@ -491,22 +481,23 @@ def scd2_incremental_salted(
         affected = target.alias("l").join(
             F.broadcast(cand).alias("h"), cond, "left_semi"
         ).select(*keys)
-        # Eager localCheckpoint (not a persist barrier): the key set feeds
-        # four joins below (two semi, two anti, each broadcasting it), and
-        # each split side is itself re-referenced several times inside
+        # Checkpoint barrier (not a persist): the key set feeds four joins
+        # below (two semi, two anti, each broadcasting it), and each split
+        # side is itself re-referenced several times inside
         # scd2_incremental — under a persist the detection lineage (target
         # semi-join + aggregation) re-ANALYZES at every one of those
         # references, and driver plan analysis, not execution, dominated
         # the salted/adaptive merges at bench scale.  A leaf plan cuts the
         # re-analysis multiplicatively; the materialization job replaces
         # the emptiness probe the persist path paid anyway (same trade as
-        # SaltedKeyWindows._barrier).
-        hot_keys = detect_hot_keys(
-            affected.unionByName(batch.select(*keys)), cfg, hot_key_threshold
-        ).localCheckpoint()
+        # SaltedKeyWindows._ghosted).
+        hot_keys = barrier(
+            detect_hot_keys(
+                affected.unionByName(batch.select(*keys)), cfg, hot_key_threshold
+            ),
+            checkpoint=True,
+        )
     if not hot_keys.limit(1).count():
-        if own_hot:
-            hot_keys.unpersist()
         if route_log is not None:
             route_log.append(("plain", 0))
         return scd2_incremental(target, batch, cfg, **kwargs)
@@ -514,17 +505,11 @@ def scd2_incremental_salted(
         route_log.append(("salted", hot_keys.count()))
     hot_t, norm_t = _split(target, cfg, hot_keys)
     hot_b, norm_b = _split(batch, cfg, hot_keys)
-    strat = SaltedKeyWindows(salts)
     norm = scd2_incremental(norm_t, norm_b, cfg, **kwargs)
-    hot = scd2_incremental(hot_t, hot_b, cfg, windows=strat, **kwargs)
-    out = norm.unionByName(hot)
-    out._scd_intermediates = (
-        getattr(norm, "_scd_intermediates", [])
-        + getattr(hot, "_scd_intermediates", [])
-        + strat.cached
-        + ([hot_keys] if own_hot else [])
+    hot = scd2_incremental(
+        hot_t, hot_b, cfg, windows=SaltedKeyWindows(salts), **kwargs
     )
-    return out
+    return norm.unionByName(hot)
 
 
 # The measured local[32] crossover for the salted chain routed THROUGH the
@@ -571,7 +556,12 @@ def scd2_incremental_adaptive(
     The default threshold sits inside the measured plain/salted crossover
     band for the composed (bucketed × salted) sink — see
     ``ADAPTIVE_HOT_KEY_THRESHOLD`` above.  ``route_log`` exposes each
-    call's decision as ``("plain"|"salted", n_hot_keys)``."""
+    call's decision as ``("plain"|"salted", n_hot_keys)``.
+
+    The detection's hot-key set and the salted route's stage barriers are
+    local checkpoints, as in :func:`scd2_incremental_salted`: a result
+    built on them cannot be recomputed after an executor holding their
+    blocks is lost, nor after their release."""
     return scd2_incremental_salted(
         target, batch, cfg,
         salts=salts,

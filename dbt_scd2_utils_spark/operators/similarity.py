@@ -37,14 +37,11 @@ def _dot(a: Column, b: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Operator-internal persist barriers route through the SHARED registry in
-# functions/caching.py (round-5 ADVICE fix: pq/ivf/bm25/lm/dedup persists
-# were unregistered, so release_caches() could not free them in long-lived
-# sessions).  _barrier / release_caches keep their names here — the public
-# escape hatch is unchanged.
-from ..functions.caching import _LIVE_CACHES  # noqa: F401  (re-export)
+# Operator-internal persists and checkpoints go through functions/caching.py,
+# whose release_caches() frees them.  _barrier / release_caches keep their
+# names here — the public escape hatch is unchanged.
 from ..functions.caching import barrier as _barrier
-from ..functions.caching import release_caches  # noqa: F401  (re-export)
+from ..functions.caching import release, release_caches  # noqa: F401
 
 
 def as_double(col: str | Column) -> Column:
@@ -911,9 +908,9 @@ def kmeans_centroids(
     centroid table stays driver-small throughout.  A cluster that loses
     all points drops out (k shrinks), same in the oracle.
     """
-    pts = df.select(
+    pts = _barrier(df.select(
         F.col(id_col).alias("pid"), as_double(vec_col).alias("pv")
-    ).persist()
+    ))
     w0 = Window.orderBy("pid")
     cents = (
         pts.orderBy("pid")
@@ -949,17 +946,30 @@ def kmeans_centroids(
                 ).alias("mean")
             )
         )
-        cents = means.groupBy("cent_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "mean"))),
-                lambda s: s["mean"],
-            ).alias("cv")
-        )
         # Materialize: the next iteration references cents twice and the
         # lineage would otherwise recompute every prior iteration per ref.
-        cents = cents.localCheckpoint()
-    pts.unpersist()
-    return cents
+        prev, cents = cents, _barrier(
+            means.groupBy("cent_id").agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("dim", "mean"))),
+                    lambda s: s["mean"],
+                ).alias("cv")
+            ),
+            checkpoint=True,
+        )
+        release(prev)
+    release(pts)
+    return _local_result(cents)
+
+
+def _local_result(df: DataFrame) -> DataFrame:
+    """``df`` (driver-small: every round broadcasts it) as a local
+    relation the caller owns, no longer built on this call's last
+    checkpoint, which is freed — so no later release of the session's
+    artifacts can invalidate a trained model the caller holds."""
+    out = df.sparkSession.createDataFrame(df.collect(), df.schema)
+    release(df)
+    return out
 
 
 def kmeans_centroids_vectorized(
@@ -986,9 +996,9 @@ def kmeans_centroids_vectorized(
     from pyspark.sql.types import LongType, StructField, StructType
 
     spark = df.sparkSession
-    pts = df.select(
+    pts = _barrier(df.select(
         F.col(id_col).alias("pid"), as_double(vec_col).alias("pv")
-    ).persist()
+    ))
     seed_rows = pts.orderBy("pid").limit(k).collect()
     C = np.array([list(r["pv"]) for r in seed_rows], dtype=np.float64)
     ids = list(range(len(C)))  # matrix row position -> cent_id label
@@ -1060,7 +1070,7 @@ def kmeans_centroids_vectorized(
             [[by_cent[c][d] for d in sorted(by_cent[c])] for c in ids],
             dtype=np.float64,
         )
-    pts.unpersist()
+    release(pts)
     return spark.createDataFrame(
         [(int(c), [float(x) for x in C[i]]) for i, c in enumerate(ids)],
         "cent_id long, cv array<double>",
@@ -2005,9 +2015,9 @@ def pq_codebooks(
         _l2_normalize(as_double(vec_col)).alias("_nv"),
     )
     arr = F.array(*[F.slice("_nv", j * sub + 1, sub) for j in range(m)])
-    pts = normed.select(
+    pts = _barrier(normed.select(
         "pid", F.posexplode(arr).alias("sub_id", "pv")
-    ).withColumn("sub_id", F.col("sub_id").cast("long")).persist()
+    ).withColumn("sub_id", F.col("sub_id").cast("long")))
     w0 = Window.partitionBy("sub_id").orderBy("pid")
     cents = (
         pts.withColumn("rn", F.row_number().over(w0))
@@ -2047,18 +2057,18 @@ def pq_codebooks(
                 ).alias("mean")
             )
         )
-        cents = (
-            means.groupBy("sub_id", "cent_id")
-            .agg(
+        prev, cents = cents, _barrier(
+            means.groupBy("sub_id", "cent_id").agg(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("dim", "mean"))),
                     lambda s: s["mean"],
                 ).alias("cv")
-            )
-            .localCheckpoint()
+            ),
+            checkpoint=True,
         )
-    pts.unpersist()
-    return cents.select("sub_id", "cent_id", "cv")
+        release(prev)
+    release(pts)
+    return _local_result(cents).select("sub_id", "cent_id", "cv")
 
 
 def _pq_subvecs(

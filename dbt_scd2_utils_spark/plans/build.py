@@ -4,7 +4,7 @@ Mirrors the reference lifecycle (``materialization_scd.sql:19-38`` +
 ``scd_plan.sql:24-287``, SURVEY.md §3.1):
 
 1. resolve + validate config (``ScdConfig`` — same errors/warnings);
-2. evaluate the model DataFrame once (``df.cache()`` ≡ the CTAS temp table,
+2. evaluate the model DataFrame once (a ``barrier`` ≡ the CTAS temp table,
    ``create_temp_table_as.sql:6-12``) and introspect ``df.schema``
    (≡ ``adapter.get_columns_in_relation``, no extra round trip in Spark);
 3. decide initial vs incremental: ``full_refresh or target missing``
@@ -16,6 +16,7 @@ Mirrors the reference lifecycle (``materialization_scd.sql:19-38`` +
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -24,6 +25,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.caching import barrier, scope
 from ..operators.scd01 import (
     scd0_incremental,
     scd0_initial_load,
@@ -129,18 +131,24 @@ def _merge_maxima(into: dict, other: dict) -> None:
             into.setdefault(c, None)
 
 
-def _release_intermediates(result: DataFrame) -> None:
-    """Unpersist the merge intermediates an operator attached to its result
-    (see ``scd2_incremental``).  Call only after the result has been
-    materialized: persisted entries released early just recompute, but the
-    salted chain's entries are CHECKPOINTED (lineage truncated), so the
-    result DataFrame must not be re-executed after this call — both sinks
-    satisfy that by writing first and re-reading from disk."""
-    for df in getattr(result, "_scd_intermediates", []):
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
+def _write_op(method):
+    """Run an ``ScdTable`` write inside one artifact scope, then return the
+    post-write table.  Everything the write registered — the batch
+    barrier, the merge's persisted and checkpointed intermediates — is
+    freed when it commits or aborts (a ``ConcurrentWriteError`` retry must
+    not leak one dead set per attempt), and BEFORE ``refreshByPath``:
+    their plans read files the commit displaced, and a refresh would
+    re-cache them.  The write has materialized them, and the caller gets a
+    fresh read, so nothing runs on them again."""
+
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        with scope():
+            method(self, *args, **kwargs)
+        self.spark.catalog.refreshByPath(self.path)
+        return self.read()
+
+    return run
 
 
 class ScdTable:
@@ -526,8 +534,6 @@ class ScdTable:
         only (bounded by ``bucket_count``, never by key count).
         Unbucketed tables fall back to the same semi-join over the full
         read — correct, just unpruned."""
-        from ..functions.caching import barrier
-
         key_cols = list(self.cfg.unique_key)
         # S5 barrier: the plan evaluates the key set twice (the bucket-id
         # collect below + the broadcast join in the returned plan) — an
@@ -1051,9 +1057,10 @@ class ScdTable:
         supplies only its bucket rewrite:
 
         - ``frame()`` plans the rows to write (called inside the timed
-          stage phase; its merge intermediates are released whether the
-          commit succeeds or aborts), staged under ``bucket_count``'s
-          mapping (default: this handle's) as one file per bucket; a frame
+          stage phase; the operation's scope frees its merge
+          intermediates whether the commit succeeds or aborts), staged
+          under ``bucket_count``'s mapping (default: this handle's) as
+          one file per bucket; a frame
           that already carries ``_scd_bucket`` (a bucket-local merge,
           hash-partitioned on it) is written as is, and the manifest
           records its schema without that column; ``frame=None`` stages
@@ -1094,69 +1101,58 @@ class ScdTable:
         gen_rel = _gen_dirname(gen)
         stage_dir = self._new_stage_dir()
         result = frame() if frame is not None else None
-        try:
-            if result is None:
-                os.makedirs(stage_dir)
-            else:
-                staged = result
-                if BUCKET_COL not in result.columns:
-                    # One file per rewritten bucket (not one per shuffle
-                    # task per bucket): without this co-location the
-                    # generation dirs inherit the task fan-out and the
-                    # table's file count grows ∝ writes × buckets — every
-                    # later merge then pays a listing of all of them
-                    # (measured: the s40 bucketed merge cost grew WITH the
-                    # table until this fix).  A bucket-local merge result
-                    # already carries the column, hash-partitioned on it.
-                    staged = result.withColumn(
-                        BUCKET_COL, self._bucket_expr(result, bucket_count)
-                    ).repartition(len(buckets), F.col(BUCKET_COL))
-                staged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                    stage_dir
-                )
-                manifest["schema"] = result.drop(BUCKET_COL).schema.json()
-            self.last_phase_times["merge_and_stage"] = time.perf_counter() - t0
-            # The generation is durable and invisible: patch the rewritten
-            # buckets' entries (O(rewritten) scanning, not O(table)).
-            for b in buckets:
-                entry = self._scan_bucket_dir(
-                    os.path.join(stage_dir, f"{BUCKET_COL}={b}")
-                )
-                if entry is None:
-                    manifest["buckets"].pop(str(b), None)
-                else:
-                    manifest["buckets"][str(b)] = self._manifest_entry(
-                        [f"{gen_rel}/{BUCKET_COL}={b}/{n}" for n in entry["files"]],
-                        entry,
-                    )
-            if displaced:
-                manifest["superseded"][str(gen)] = [
-                    os.path.relpath(p, self.path) for p in displaced
-                ]
-            manifest["gen"] = gen
-            self._stamp(manifest, op, bucket_count, txn)
-            t0 = time.perf_counter()
-            self._commit_transaction(
-                stage_dir, os.path.join(self.path, gen_rel), base_gen, manifest
+        if result is None:
+            os.makedirs(stage_dir)
+        else:
+            staged = result
+            if BUCKET_COL not in result.columns:
+                # One file per rewritten bucket (not one per shuffle
+                # task per bucket): without this co-location the
+                # generation dirs inherit the task fan-out and the
+                # table's file count grows ∝ writes × buckets — every
+                # later merge then pays a listing of all of them
+                # (measured: the s40 bucketed merge cost grew WITH the
+                # table until this fix).  A bucket-local merge result
+                # already carries the column, hash-partitioned on it.
+                staged = result.withColumn(
+                    BUCKET_COL, self._bucket_expr(result, bucket_count)
+                ).repartition(len(buckets), F.col(BUCKET_COL))
+            staged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
+                stage_dir
             )
-            self._write_meta()
-            self.last_phase_times["swap_and_commit"] = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            ledger_before = json.dumps(manifest["superseded"], sort_keys=True)
-            self._vacuum(manifest, gen)
-            if json.dumps(manifest["superseded"], sort_keys=True) != ledger_before:
-                self._persist_ledger_if_unchanged(manifest, gen)
-            self.last_phase_times["vacuum"] = time.perf_counter() - t0
-        finally:
-            # Release the merge's persisted intermediates whether the commit
-            # SUCCEEDED (their plans hold leaf files now on the superseded
-            # ledger — refreshByPath re-caching them would pin listings
-            # vacuum deletes later) or ABORTED (the advertised
-            # ConcurrentWriteError retry must not leak one dead cache pair
-            # per conflicted attempt).
-            if result is not None:
-                _release_intermediates(result)
-        self.spark.catalog.refreshByPath(self.path)
+            manifest["schema"] = result.drop(BUCKET_COL).schema.json()
+        self.last_phase_times["merge_and_stage"] = time.perf_counter() - t0
+        # The generation is durable and invisible: patch the rewritten
+        # buckets' entries (O(rewritten) scanning, not O(table)).
+        for b in buckets:
+            entry = self._scan_bucket_dir(
+                os.path.join(stage_dir, f"{BUCKET_COL}={b}")
+            )
+            if entry is None:
+                manifest["buckets"].pop(str(b), None)
+            else:
+                manifest["buckets"][str(b)] = self._manifest_entry(
+                    [f"{gen_rel}/{BUCKET_COL}={b}/{n}" for n in entry["files"]],
+                    entry,
+                )
+        if displaced:
+            manifest["superseded"][str(gen)] = [
+                os.path.relpath(p, self.path) for p in displaced
+            ]
+        manifest["gen"] = gen
+        self._stamp(manifest, op, bucket_count, txn)
+        t0 = time.perf_counter()
+        self._commit_transaction(
+            stage_dir, os.path.join(self.path, gen_rel), base_gen, manifest
+        )
+        self._write_meta()
+        self.last_phase_times["swap_and_commit"] = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        ledger_before = json.dumps(manifest["superseded"], sort_keys=True)
+        self._vacuum(manifest, gen)
+        if json.dumps(manifest["superseded"], sort_keys=True) != ledger_before:
+            self._persist_ledger_if_unchanged(manifest, gen)
+        self.last_phase_times["vacuum"] = time.perf_counter() - t0
 
     def _sweep_orphan_generations(self) -> None:
         """Remove `_gen-*` dirs newer than the LIVE committed generation —
@@ -1457,6 +1453,7 @@ class ScdTable:
 
     # -- lifecycle ------------------------------------------------------
 
+    @_write_op
     def build(
         self,
         model_df: DataFrame,
@@ -1487,8 +1484,9 @@ class ScdTable:
         cfg = self.cfg
         # S5: single evaluation of the model ("temp table") — the plan
         # references the batch multiple times (new_records, dedup, redundant
-        # check), exactly why the reference materializes it once.
-        model_df = model_df.cache()
+        # check), exactly why the reference materializes it once; the
+        # write's scope drops it (S8).
+        model_df = barrier(model_df)
         cfg.validate_against_schema(model_df.schema)
 
         # scd_plan.sql:104 + is_incremental.sql:18-28: initial unless the
@@ -1512,19 +1510,12 @@ class ScdTable:
             if txn_epoch is not None:
                 last = ((manifest or {}).get("txn") or {}).get(txn_app)
                 if isinstance(last, int) and last >= txn_epoch:
-                    model_df.unpersist()
-                    return self.read()
-            try:
-                self._build_bucketed_incremental(
-                    model_df, txn_epoch=txn_epoch, txn_app=txn_app,
-                    manifest=manifest,
-                )
-            finally:
-                # Unpersist even when the commit ABORTS (the advertised
-                # ConcurrentWriteError retry path): a losing stream would
-                # otherwise pin one cached batch per conflicted attempt.
-                model_df.unpersist()
-            return self.read()
+                    return
+            self._build_bucketed_incremental(
+                model_df, txn_epoch=txn_epoch, txn_app=txn_app,
+                manifest=manifest,
+            )
+            return
 
         if cfg.scd_type == 2:
             if initial:
@@ -1548,8 +1539,6 @@ class ScdTable:
             txn_app=txn_app,
             prior_manifest=manifest,
         )
-        model_df.unpersist()  # S8: drop the temp relation
-        return self.read()
 
     def _build_bucketed_incremental(
         self,
@@ -1591,8 +1580,8 @@ class ScdTable:
             # No files AND no recorded schema (legacy empty table): derive
             # the SCD output schema from the batch itself.
             target_slice = scd2_initial_load(batch.limit(0), self.cfg)
-        # Both travel on the target slice like _scd_intermediates on a
-        # result, and any other merge_fn ignores them.  The bucketing (the
+        # Both travel on the target slice as attributes, and any other
+        # merge_fn ignores them.  The bucketing (the
         # bucket expression and the affected-bucket count) lets the stock
         # merge run bucket-local: the slice holds every version of every
         # batch key, so one shuffle on the bucket serves the whole merge
@@ -1614,6 +1603,7 @@ class ScdTable:
             txn={txn_app: txn_epoch} if txn_epoch is not None else None,
         )
 
+    @_write_op
     def rebucket(self, new_count: int) -> DataFrame:
         """Change the table's bucket count — the maintenance op for data
         growth: buckets are sized (~50k rows) at creation, so a table that
@@ -1668,8 +1658,8 @@ class ScdTable:
         # hard-failing every later build() on a bucket-count mismatch.
         self.partition_buckets = new_count
         self._explicit_buckets = True
-        return self.read()
 
+    @_write_op
     def restore(self, gen: int) -> DataFrame:
         """Roll the table BACK to retained generation ``gen`` as a NEW
         commit (Delta's ``RESTORE TABLE ... TO VERSION AS OF`` in
@@ -1758,8 +1748,8 @@ class ScdTable:
         if manifest["bucket_count"]:
             self.partition_buckets = manifest["bucket_count"]
             self._explicit_buckets = True
-        return self.read()
 
+    @_write_op
     def delete_keys(self, keys: DataFrame) -> DataFrame:
         """Hard-delete EVERY retained version of the given business keys —
         the GDPR / right-to-be-forgotten path a training-data dimension
@@ -1785,10 +1775,9 @@ class ScdTable:
         full-table rewrite (no bucket map to prune by) via the atomic
         swap path — correct, just unpruned."""
         key_cols = list(self.cfg.unique_key)
-        # Local S5 barrier: the key set is evaluated twice (the bucket-id
-        # collect + the anti-join) but is fully consumed before this
-        # method returns, so the cache's lifetime is contained here.
-        cand = keys.select(*key_cols).distinct().cache()
+        # S5 barrier: the key set is evaluated twice (the bucket-id
+        # collect + the anti-join); the write's scope drops it.
+        cand = barrier(keys.select(*key_cols).distinct())
 
         def _anti(target: DataFrame, batch: DataFrame, cfg) -> DataFrame:
             return target.alias("l").join(
@@ -1797,32 +1786,26 @@ class ScdTable:
                 "left_anti",
             )
 
-        try:
-            manifest = self._read_manifest()
-            self._adopt_bucket_count(manifest)
-            if (
-                self.partition_buckets
-                and manifest is not None
-                and manifest.get("schema")
-                and "gen" in manifest
-            ):
-                self._build_bucketed_incremental(
-                    cand, manifest=manifest, merge_fn=_anti, op="delete"
-                )
-                return self.read()
-            if not self.exists():
-                raise ValueError(
-                    f"delete_keys() on a table that does not exist: {self.path}"
-                )
-            if cand.limit(1).count() == 0:
-                # Same no-op the bucketed path gets from its empty
-                # affected-bucket set — never a full rewrite for nothing.
-                return self.read()
-            result = _anti(self.read(), cand, self.cfg)
-            self._atomic_write(result, prior_manifest=manifest)
-            return self.read()
-        finally:
-            cand.unpersist()
+        manifest = self._read_manifest()
+        self._adopt_bucket_count(manifest)
+        if (
+            self.partition_buckets
+            and manifest is not None
+            and manifest.get("schema")
+            and "gen" in manifest
+        ):
+            self._build_bucketed_incremental(
+                cand, manifest=manifest, merge_fn=_anti, op="delete"
+            )
+            return
+        if not self.exists():
+            raise ValueError(
+                f"delete_keys() on a table that does not exist: {self.path}"
+            )
+        # An empty key set is the same no-op the bucketed path gets from
+        # its empty affected-bucket set — never a full rewrite for nothing.
+        if cand.limit(1).count():
+            self._atomic_write(_anti(self.read(), cand, self.cfg), prior_manifest=manifest)
 
     def vacuum(self, retain_generations: int | None = None) -> int:
         """Explicit maintenance sweep — Delta's ``VACUUM`` in miniature:
@@ -1881,7 +1864,6 @@ class ScdTable:
         prior_manifest: dict | None = None,
     ) -> None:
         tmp = self.path + "__tmp"
-        result = df  # the operator output carrying _scd_intermediates
         data_schema_json = df.schema.json()
         writer = df.write.mode("overwrite")
         if self.partition_buckets:
@@ -1929,14 +1911,6 @@ class ScdTable:
             os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old, ignore_errors=True)
-        # Release the merge's persisted intermediates BEFORE refreshing —
-        # same ordering as _transact: they were planned over leaf files
-        # the swap just deleted, and refreshByPath would
-        # otherwise recache the dead plans (re-listing deleted files on
-        # every vanilla merge).
-        _release_intermediates(result)
-        # Invalidate cached file listings for readers of the swapped path.
-        self.spark.catalog.refreshByPath(self.path)
 
 
 def scd_build(

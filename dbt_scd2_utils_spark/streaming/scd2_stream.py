@@ -7,59 +7,43 @@ SAME ``scd2_incremental`` plan the batch path uses, so streaming and batch
 semantics are identical by construction (no separate state-store logic to
 keep in sync).
 
-The sink keeps the target as parquet with an atomic directory swap
-(write to ``_tmp`` → rename), mirroring the vanilla-merge durability story
-(SURVEY.md §7.3 item 5).
+Both sinks write through ``plans/build.py::ScdTable``: the vanilla one
+keeps the target as parquet with an atomic directory swap (write to
+``__tmp`` → rename), mirroring the vanilla-merge durability story
+(SURVEY.md §7.3 item 5); the bucketed one commits generations.  Each
+micro-batch's merge intermediates are released at its commit, so a
+long-running stream holds none of them.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.scd2 import scd2_incremental, scd2_initial_load
 from ..plans.config import ScdConfig
 
 
 class Scd2ParquetSink:
-    """Micro-batch SCD2 sink over a parquet directory target."""
+    """Micro-batch SCD2 sink over a parquet directory target: an
+    unbucketed ``ScdTable``."""
 
     def __init__(self, spark: SparkSession, path: str, cfg: ScdConfig):
-        self.spark = spark
-        self.path = path
-        self.cfg = cfg
+        from ..plans.build import ScdTable
+
+        self.table = ScdTable(spark, path, cfg)
 
     def exists(self) -> bool:
-        return os.path.exists(os.path.join(self.path, "_SUCCESS"))
+        return self.table.exists()
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self.table.read()
 
     def apply_batch(self, batch: DataFrame) -> None:
         """Initial load on first batch, incremental merge afterwards, with
         an atomic tmp-dir swap so readers never see a half-written table."""
         if batch.isEmpty():
             return
-        if not self.exists():
-            result = scd2_initial_load(batch, self.cfg)
-        else:
-            result = scd2_incremental(self.read(), batch, self.cfg)
-        tmp = self.path + "__tmp"
-        result.write.mode("overwrite").parquet(tmp)
-        old = self.path + "__old"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-        # Release the merge's persisted intermediates: a long-running stream
-        # would otherwise accumulate one dead (input files swapped away)
-        # cache entry pair PER MICRO-BATCH in the CacheManager.
-        from ..plans.build import _release_intermediates
-
-        _release_intermediates(result)
+        self.table.build(batch)
 
     def foreach_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.apply_batch(batch)

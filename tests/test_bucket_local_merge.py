@@ -18,20 +18,19 @@ from pyspark.sql.types import (
 )
 
 from dbt_scd2_utils_spark import ScdConfig, scd2_incremental, scd2_initial_load
+from dbt_scd2_utils_spark.functions import caching
 from dbt_scd2_utils_spark.plans.build import BUCKET_COL, ScdTable
 from tests.fixtures.seeds import CUSTOMERS_RAW, CUSTOMERS_SCHEMA
 
 
 def assert_bucket_local_plan(result) -> None:
     """The merge plans exactly one Exchange (hash-partitioned on the
-    bucket), no join, no cached relation besides the batch, and hands the
-    sink no persisted intermediates."""
+    bucket), no join and no cached relation besides the batch."""
     plan = result._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
     assert f"Exchange hashpartitioning({BUCKET_COL}#" in plan, plan
     assert "Join" not in plan, plan
     assert plan.count("InMemoryTableScan") == 1, plan  # the cached batch
-    assert not getattr(result, "_scd_intermediates", None)
 
 
 def _ts(day: int, hour: int = 0) -> datetime:
@@ -152,12 +151,15 @@ def test_bucket_local_equals_broadcast_under_schema_evolution(spark, evolution):
 def test_bucketed_commit_merges_bucket_local(spark, tmp_path):
     """A bucketed commit through the stock merge plans one shuffle on the
     bucket, writes one file per rewritten bucket, and equals the vanilla
-    sink's table."""
+    sink's table.  The merge registers no artifact in the write's scope."""
     cfg = ScdConfig(unique_key=("customer_id",), deleted_at_column="deleted_at")
-    results = []
+    results, registered = [], []
 
     def merge(target, batch, c):
+        write_scope = caching._scopes()[-1]
+        before = len(write_scope)
         out = scd2_incremental(target, batch, c)
+        registered.append(len(write_scope) - before)
         # Plan while the batch is still cached (build() releases it).
         out._jdf.queryExecution().executedPlan()
         results.append(out)
@@ -170,7 +172,7 @@ def test_bucketed_commit_merges_bucket_local(spark, tmp_path):
         b = spark.createDataFrame(CUSTOMERS_RAW[i], CUSTOMERS_SCHEMA)
         out = t.build(b)
         expected = v.build(b)
-    assert len(results) == 2
+    assert len(results) == 2 and registered == [0, 0]
     for r in results:
         assert_bucket_local_plan(r)
     assert out.exceptAll(expected).count() == 0

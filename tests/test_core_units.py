@@ -143,38 +143,43 @@ def test_high_water_mark_and_incremental_source(spark):
     assert cut.count() == 2
 
 
-def test_release_entry_caches_frees_query_layer(spark):
-    """A full driver session must be releasable: per-query persists
-    route through the shared registry and the memo caches
-    (_MERGE_TARGET_CACHE/_INDEX_CACHE) are cleared+unpersisted by
-    entry.release_entry_caches (round-6 VERDICT hygiene item)."""
+def test_release_caches_frees_query_layer(spark):
+    """A full driver session must be releasable: per-query barriers, the
+    memos (staged merge targets, indexes) and every staging dir are freed
+    by functions/caching.release_caches, and the session's persistent
+    RDDs go back to their starting count."""
     from dbt_scd2_utils_spark import entry as em
     from dbt_scd2_utils_spark.functions import caching
 
-    em.release_entry_caches()  # clean slate
+    def staged_dirs():
+        return [a for a in caching._LIVE_CACHES if isinstance(a, str)]
+
+    caching.release_caches()  # clean slate
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
     sf = "/root/testdata/sf0.001"
     em.q_scd2_diff_cdc(spark, sf).count()          # per-query barrier
-    em._staged_target(spark, sf, em.SCD2_CFG, "collapse")  # memo cache
+    em._staged_target(spark, sf, em.SCD2_CFG, "collapse")  # memo
     assert len(caching._LIVE_CACHES) >= 1
-    assert len(em._MERGE_TARGET_CACHE) == 1
+    assert len(caching._MEMOS) == 1
     # The one-shot queries that write their input before reading it back
     # stage through the same registry.
-    memo_dirs = len(em._STAGED_DIRS)
+    memo_dirs = len(staged_dirs())
     for q in (em.q_jsonl_roundtrip, em.q_events_partition_pruned,
               em.q_invariant_store_failures):
         q(spark, sf).count()
-    assert len(em._STAGED_DIRS) == memo_dirs + 3
-    staged = list(em._STAGED_DIRS)
+    assert len(staged_dirs()) == memo_dirs + 3
+    staged = staged_dirs()
     assert staged and all(os.path.isdir(d) for d in staged)
-    released = em.release_entry_caches()
+    released = caching.release_caches()
     assert released >= 2
     assert caching._LIVE_CACHES == []
-    assert em._MERGE_TARGET_CACHE == {} and em._INDEX_CACHE == {}
+    assert caching._MEMOS == {}
     # The staged target's parquet dir goes with its memo entry.
     assert not any(os.path.exists(d) for d in staged)
-    assert em._STAGED_DIRS == []
+    assert jsc.getPersistentRDDs().size() == start
     # idempotent on an empty registry
-    assert em.release_entry_caches() == 0
+    assert caching.release_caches() == 0
 
 
 def test_get_spark_disables_dataframe_debugging(spark):

@@ -158,9 +158,18 @@ def _random_rows(rng: random.Random) -> list[list]:
     return rows
 
 
+def _null_valid_from_rows():
+    """The clean rows, but the first version's valid_from is null and its
+    valid_to is the far future."""
+    rows = _clean_rows()
+    rows[0][2], rows[0][3] = None, HI
+    return rows
+
+
 SEEDS = range(30)
 CASES = {
     "clean": _clean_rows(),
+    "null_valid_from": _null_valid_from_rows(),
     **{f"check_{n}": rows for n, (rows, _) in CORRUPTIONS.items()},
     **{f"seed_{s}": _random_rows(random.Random(s)) for s in SEEDS},
 }
@@ -191,6 +200,19 @@ def test_each_check_flags_its_corruption(case, check):
     assert set(suite) == set(CORRUPTIONS)
     got, want = _bags(suite, _standalone(df, CFG))
     assert {n for n, _ in want} == CORRUPTIONS[check][1]
+    assert got == want
+
+
+def test_null_valid_from_row_does_not_flag_overlaps(case):
+    """A null valid_from sorts first in the key's window, but the overlap
+    self-join never pairs it, so its far valid_to must not flag the
+    check: the suite's overlap frame plans no join and still equals the
+    standalone frame."""
+    df = case("null_valid_from")
+    suite = inv.scd2_invariant_suite(df, CFG)
+    plan = suite["no_validity_overlaps"]._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    got, want = _bags(suite, _standalone(df, CFG))
     assert got == want
 
 
