@@ -887,40 +887,22 @@ def q_scd2_sequence_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             CUSTOMERS_SCHEMA,
         ).withColumn("_created_at", F.col("_updated_at"))
 
-    # Scope canChangeCachedPlanOutputPartitioning=true to this query: the
-    # six persisted merge states are ~60 rows, and letting AQE coalesce
-    # inside the cached plans trims the 32-partition fan-out every
-    # iteration (~10-20% measured).  NOT set globally — on queries whose
-    # downstream joins reuse a cache's partitioning it costs 15-25%
-    # (session.py note).
-    _ccp = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    prior = spark.conf.get(_ccp, "false")
-    spark.conf.set(_ccp, "true")
-    try:
-        cut = state = scd2_initial_load(batch(1), SEQ_CFG)
-        for i in range(2, 7):
-            # Materialize between iterations like a table write (bounded:
-            # the seed state is ~60 rows; a real deployment reads the
-            # persisted target table here, cf. _staged_target).
-            # An eager local checkpoint executes the iteration's merge and
-            # leaves a leaf plan, like the previous collect()+
-            # createDataFrame() roundtrip, but the rows stay in the JVM —
-            # no driver collect, no Python re-serialization, no
-            # 32-slice parallelized scan per downstream reference
-            # (guide §5: localCheckpoint is the cheap lineage cut).
-            # A/B (repeat-3 medians): 12.5 s -> ~8 s.  The previous
-            # iteration's checkpoint is dead once this one exists.
-            prev, cut = cut, barrier(state, checkpoint=True)
-            release(prev)
-            # broadcast_source=True skips the eager broadcast-sizing
-            # count (operators/scd2.py:374) — these batches are <=37
-            # rows, always broadcast; one fewer synchronous job per
-            # iteration (~2 s over the six; output proven bit-equal).
-            state = scd2_incremental(
-                cut, batch(i), SEQ_CFG, broadcast_source=True
-            )
-    finally:
-        spark.conf.set(_ccp, prior)
+    cut = state = scd2_initial_load(batch(1), SEQ_CFG)
+    for i in range(2, 7):
+        # Materialize between iterations like a table write (bounded:
+        # the seed state is ~60 rows; a real deployment reads the
+        # persisted target table here, cf. _staged_target).
+        # An eager local checkpoint executes the iteration's merge and
+        # leaves a leaf plan, like the previous collect()+
+        # createDataFrame() roundtrip, but the rows stay in the JVM —
+        # no driver collect, no Python re-serialization, no
+        # 32-slice parallelized scan per downstream reference
+        # (guide §5: localCheckpoint is the cheap lineage cut).
+        # A/B (repeat-3 medians): 12.5 s -> ~8 s.  The previous
+        # iteration's checkpoint is dead once this one exists.
+        prev, cut = cut, barrier(state, checkpoint=True)
+        release(prev)
+        state = scd2_incremental(cut, batch(i), SEQ_CFG)
     return state
 
 
@@ -3364,8 +3346,9 @@ SEMANTICS_CHANGED: dict[str, int] = {
     "knn_graph_pq": 9,
     "semantic_dedup_pq": 9,
     "cluster_balanced_sample": 9,
-    # r9: replay passes broadcast_source=True (skips the eager sizing
-    # count; proven bit-equal) — re-gate the choreography (green r9),
+    # r9: replay passed broadcast_source=True (skipped the eager sizing
+    # count, a knob since removed; proven bit-equal) — re-gate the
+    # choreography (green r9),
     # then re-pinned r10 below with the rest of the chain.
     # r10: the SCD2 window chain grew the KeyWindows strategy seam
     # (operators/scd2.py — scd2_initial_load + scd2_incremental signatures

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def parallelize_narrow(df: DataFrame) -> DataFrame:
@@ -26,3 +30,33 @@ def parallelize_narrow(df: DataFrame) -> DataFrame:
     except Exception:
         pass
     return df
+
+
+def null_safe_key_eq(left: str, right: str, keys: Sequence[str]) -> Column:
+    """Null-safe equi-join condition over aliased key columns (unique-key
+    columns may legitimately hold NULLs)."""
+    return reduce(
+        Column.__and__,
+        [F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}")) for k in keys],
+    )
+
+
+def key_join(
+    df: DataFrame, keys: Sequence[str], key_rows: DataFrame, how: str
+) -> DataFrame:
+    """``df``'s rows whose key does (``how="left_semi"``) or does not
+    (``"left_anti"``) occur in ``key_rows``: a broadcast join, null-safe on
+    ``keys``, so ``df`` streams and is never shuffled.  Duplicate keys in
+    ``key_rows`` change neither result, and the build side drops them."""
+    h = F.broadcast(key_rows.select(*keys)).alias("h")
+    return df.alias("l").join(h, null_safe_key_eq("l", "h", keys), how)
+
+
+def split_by_keys(
+    df: DataFrame, keys: Sequence[str], key_rows: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(``df``'s rows whose key occurs in ``key_rows``, the rest)."""
+    return (
+        key_join(df, keys, key_rows, "left_semi"),
+        key_join(df, keys, key_rows, "left_anti"),
+    )

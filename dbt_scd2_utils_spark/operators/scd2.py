@@ -5,20 +5,17 @@ Spark-first re-expression of the reference's generated-SQL pipeline:
 * initial load  ≡ ``macros/materializations/scd/types/type_2/get_initial_load_scd2_sql.sql:52-96``
 * incremental   ≡ ``macros/materializations/scd/types/type_2/get_incremental_scd2_sql.sql:75-268``
 
-Each reference CTE is a named DataFrame.  The incremental merge takes one
-of two shapes (``scd2_incremental`` picks):
-
-* **bucket-local** (``_bucket_local_merge``) when the target is a bucketed
-  ``ScdTable``'s affected-bucket slice (the sink attaches
-  ``_scd_bucketing``): target slice and batch are unioned and shuffled
-  ONCE on ``_scd_bucket``; every per-key CTE and the MERGE's update rules
-  run as windows inside that partitioning, and the result feeds the
-  sink's bucket-partitioned write with no further exchange;
-* **broadcast** (``build_scd2_merge_source`` + a broadcast left join and
-  union) for an unbounded target — the vanilla sink's whole table — where
-  shuffling the big side is what the broadcast avoids; also for
-  ``incremental_predicates``, an explicit ``broadcast_source``, and the
-  salted route's split frames.
+Each reference CTE is a named DataFrame.  The incremental merge is one
+per-key window chain (``_window_merge``): the target rows it touches and
+the batch are unioned and shuffled ONCE on the key, and every per-key CTE
+and the MERGE's update rules run as windows inside that partitioning.  On
+a bucketed ``ScdTable``'s affected-bucket slice (the sink attaches
+``_scd_bucketing``) the shuffle is on ``_scd_bucket`` and the result feeds
+the sink's bucket-partitioned write with no further exchange; on any other
+target a broadcast semi/anti join on the batch's keys first sets the
+untouched rows aside.  The MERGE source itself (``build_scd2_merge_source``)
+plus a join-back (``_merge_via_source``) serves only the salted strategy's
+hot subset, the Delta sink, and the tests as a reference.
 
 Documented deviation (SURVEY.md §7.0): the reference dedups duplicate
 ``(business key, updated_at)`` rows with ``row_number() over (... order by 1)``
@@ -76,6 +73,7 @@ from ..functions.audit import (
 )
 from ..functions.caching import barrier
 from ..functions.hashing import surrogate_key
+from ..functions.partitioning import split_by_keys
 from ..plans.config import ScdConfig
 
 # Internal helper column names (dropped before returning results).
@@ -91,6 +89,8 @@ IN_MERGE_COL = "_in_merge"
 # The bucketed sink's partition column; a bucket-local merge result carries
 # it (plans/build.py writes such a frame as is).
 BUCKET_COL = "_scd_bucket"
+# The largest merge source _merge_via_source broadcasts.
+BROADCAST_MAX_ROWS = 5_000_000
 
 
 def _orderable(df: DataFrame, cols: Sequence[str]) -> list[str]:
@@ -473,60 +473,87 @@ def build_scd2_merge_source(
     return source, prev, business_cols
 
 
-def _bucket_local_merge(
+def _predicate(cfg: ScdConfig) -> Column:
+    """``incremental_predicates`` ANDed, NULL as false."""
+    return F.coalesce(
+        F.expr(" AND ".join(f"({p})" for p in cfg.incremental_predicates)),
+        F.lit(False),
+    )
+
+
+def _window_merge(
     target: DataFrame, batch: DataFrame, cfg: ScdConfig,
-    bucket: Column, n_buckets: int,
+    bucketing: tuple[Column, int] | None = None,
 ) -> DataFrame:
-    """The whole merge as one bucket-partitioned window chain, for a target
-    that is the affected buckets of a bucketed table (every version of
-    every batch key, plus the untouched keys sharing their buckets).
+    """The whole merge as one key-partitioned window chain.
+
+    ``bucketing`` = (bucket expression, affected-bucket count) marks the
+    affected buckets of a bucketed table, which hold every version of
+    every batch key: all of it is shuffled ONCE on ``_scd_bucket``, and
+    the result carries ``_scd_bucket`` for the sink's partitioned write.
+    Any other target is cut by ``split_by_keys`` on the batch's keys: the
+    touched rows are shuffled once on the key, the rest union back as is.
 
     The target rows (priority 0, audit columns kept as ``_old<name>``) and
-    the batch (priority 17, NULL audit columns) are unioned, tagged with
-    ``bucket`` and the content hash, and shuffled ONCE into ``n_buckets``
-    partitions on ``_scd_bucket``.  Every later step is a window
-    partitioned by ``[_scd_bucket, *unique_key, _in_merge]``, a clustering
-    the bucket partitioning already satisfies, so no further Exchange, no
-    join and no persisted intermediate is planned.
+    the batch (priority 17, NULL audit columns) are unioned and tagged
+    with the content hash.  Every later step is a window partitioned by
+    ``[*unique_key, _in_merge]`` (after ``_scd_bucket`` when bucketed),
+    which the one shuffle satisfies: no further Exchange, no join, no
+    persisted intermediate.
 
     ``_in_merge`` marks the rows the MERGE source would hold: a key's rows
-    when it has a batch row (``previous_records``' semi-join), or under
-    J2 pruning the batch rows plus the key's target rows with ``valid_to
-    >=`` the key's earliest batch ``updated_at``.  Rows outside it pass
-    through unchanged (a separate window partition; every filter is gated
-    on the flag).  Inside it, the CTE chain runs as in
-    ``build_scd2_merge_source`` — W6 dedup, run ids, collapse or
-    changes-only, audit recompute — and the MERGE's update rules apply per
-    row: a surviving target row takes only ``merge_update_cols`` from the
-    recomputed values, a surviving batch row (an insert) takes all four,
-    and a target row collapsed out of the timeline is dropped (the
-    MERGE's delete).  The result carries ``_scd_bucket``, hash-partitioned
-    on it, for the sink's partitioned write."""
+    when it has a batch row, or under J2 pruning the batch rows plus the
+    key's target rows with ``valid_to >=`` the key's earliest batch
+    ``updated_at``; other rows pass through unchanged.  Inside it the CTE
+    chain of ``build_scd2_merge_source`` runs, and the MERGE's rules apply
+    per row: a surviving target row takes only ``merge_update_cols`` from
+    the recomputed audit values, a surviving batch row (an insert) all
+    four, and a target row collapsed out of the timeline is dropped.
+
+    A target row ``incremental_predicates`` exclude matches nothing in the
+    MERGE (``get_incremental_scd2_sql.sql:247-255``), so it enters twice: a
+    pass-through copy (``_pt``) kept out of the merge, and a merge copy
+    (``_unm``) that, if it survives, inserts with all four audit columns
+    recomputed — the reference's key-duplicating hazard."""
     business_cols = cfg.business_columns(batch.columns)
     check_cols = cfg.check_columns(batch.columns)
     keys = list(cfg.unique_key)
     u = cfg.updated_at_column
     old = {c: f"_old{c}" for c in cfg.audit_columns}
     types = {f.name.lower(): f.dataType for f in target.schema.fields}
-    rows = (
-        target.select(
+    if bucketing is None:
+        target, untouched = split_by_keys(target, keys, batch)
+    flags = ["_pt", "_unm"] if cfg.incremental_predicates else []
+    if flags:
+        fails = ~_predicate(cfg)
+        target = target.withColumn(
+            "_pt", F.explode(F.array_distinct(F.array(F.lit(False), fails)))
+        ).withColumn("_unm", fails & ~F.col("_pt"))
+    rows = target.select(
+        *business_cols,
+        *[F.col(c).alias(o) for c, o in old.items()],
+        F.lit(0).alias(PRIORITY_COL),
+        *flags,
+    ).unionByName(
+        batch.select(
             *business_cols,
-            *[F.col(c).alias(o) for c, o in old.items()],
-            F.lit(0).alias(PRIORITY_COL),
+            *[F.lit(None).cast(types[c.lower()]).alias(o) for c, o in old.items()],
+            F.lit(17).alias(PRIORITY_COL),
+            *[F.lit(False).alias(f) for f in flags],
         )
-        .unionByName(
-            batch.select(
-                *business_cols,
-                *[F.lit(None).cast(types[c.lower()]).alias(o) for c, o in old.items()],
-                F.lit(17).alias(PRIORITY_COL),
-            )
-        )
-        .withColumns({BUCKET_COL: bucket, HASH_COL: surrogate_key(check_cols)})
-        .repartition(n_buckets, BUCKET_COL)
     )
+    if bucketing is None:
+        scope = []
+        rows = rows.withColumn(HASH_COL, surrogate_key(check_cols))
+    else:
+        bucket, n_buckets = bucketing
+        scope = [BUCKET_COL]
+        rows = rows.withColumns(
+            {BUCKET_COL: bucket, HASH_COL: surrogate_key(check_cols)}
+        ).repartition(n_buckets, BUCKET_COL)
 
     is_new = F.col(PRIORITY_COL) == 17
-    per_key = Window.partitionBy(BUCKET_COL, *keys)
+    per_key = Window.partitionBy(*scope, *keys)
     if cfg.update_all_previous_records:
         in_merge = F.max(PRIORITY_COL).over(per_key) == 17
     else:
@@ -534,9 +561,11 @@ def _bucket_local_merge(
         in_merge = is_new | F.coalesce(
             F.col(old[cfg.valid_to_column]) >= first_new, F.lit(False)
         )
+    if flags:
+        in_merge = in_merge & ~F.col("_pt")
     rows = rows.withColumn(IN_MERGE_COL, in_merge)
     merging = F.col(IN_MERGE_COL)
-    part = [BUCKET_COL, *keys, IN_MERGE_COL]
+    part = [*scope, *keys, IN_MERGE_COL]
 
     # pick_a_key_any_key: previous wins (priority 0 < 17), then values.
     rows = rows.withColumn(
@@ -566,10 +595,14 @@ def _bucket_local_merge(
             | (F.col(HASH_COL) != F.col(PREV_HASH_COL))
             | ~is_new  # never drop a persisted version
         )
-    rows = rows.filter(~merging | keep)
+    if flags:  # a J2-pruned merge copy drops: its pass-through copy stands for it
+        rows = rows.filter((~merging & ~F.col("_unm")) | (merging & keep))
+        is_new = is_new | F.col("_unm")  # an unmatched survivor inserts
+    else:
+        rows = rows.filter(~merging | keep)
 
     update_set = {c.lower() for c in cfg.merge_update_cols}
-    return rows.select(
+    merged = rows.select(
         *business_cols,
         *[
             F.when(
@@ -577,97 +610,28 @@ def _bucket_local_merge(
             ).otherwise(F.col(old[c])).alias(c)
             for e, c in zip(_audit_exprs(cfg, part), cfg.audit_columns)
         ],
-        BUCKET_COL,
+        *scope,
     )
+    if bucketing is not None:
+        return merged
+    return untouched.select(*merged.columns).unionByName(merged)
 
 
-def scd2_incremental(
-    target: DataFrame, batch: DataFrame, cfg: ScdConfig,
-    broadcast_source: bool | None = None,
-    broadcast_max_rows: int = 5_000_000,
-    windows: KeyWindows = DEFAULT_WINDOWS,
+def _merge_via_source(
+    target: DataFrame, batch: DataFrame, cfg: ScdConfig, windows: KeyWindows,
 ) -> DataFrame:
-    """Apply one incremental SCD2 batch and return the NEW full table.
-
-    MERGE semantics (``get_incremental_scd2_sql.sql:238-268``) re-expressed
-    without Delta: the match condition is null-safe hash equality on the full
-    SCD2 key; matched 'delete' rows drop, matched 'upsert' rows update only
-    ``cfg.merge_update_cols``, unmatched 'upsert' rows insert.
-
-    Two physical shapes compute the same rows:
-
-    * **Bucket-local**, when ``target`` carries ``_scd_bucketing`` (a
-      bucketed ``ScdTable`` attaches its bucket expression and
-      affected-bucket count to the target slice it passes in): see
-      ``_bucket_local_merge``.  One shuffle on ``_scd_bucket``, no join,
-      no persist, and the result carries ``_scd_bucket`` so the sink
-      writes it without repartitioning.  The slice is bounded by the
-      affected buckets, so shuffling all of it is cheap, and it holds
-      every version of every batch key, so each key's merge is local to
-      one partition.
-    * **Broadcast** otherwise: the (delta-sized) merge source is
-      broadcast, so the target streams through ONE broadcast left join —
-      no shuffle of the big side, no full-outer join — and the inserts
-      anti-join runs between two small DataFrames.  This is the shape for
-      an unbounded target (the vanilla sink's whole table, whose
-      rewrite-the-table cost is inherent to the non-Delta path).  It also
-      runs, even on a bucketed slice, for ``incremental_predicates`` (a
-      predicate-failing target row must not match, so its source twin
-      inserts — the MERGE ON duplication hazard the inserts anti-join
-      mirrors), for an explicit ``broadcast_source`` (the caller forces
-      a join shape), and for a non-default ``windows`` strategy.  The
-      salted route's hot/cold split frames are joins of the slice, so
-      they carry no attribute and take this shape too.
-
-    The rest of this note is about the broadcast shape.
-
-    ``broadcast_source=None`` (default) sizes the decision at run time: the
-    persisted source's row count is compared against ``broadcast_max_rows``
-    and the merge falls back to a shuffled hash/sort-merge join when a batch
-    touches too many keys to broadcast (the backfill-the-world case).  The
-    count materializes the persisted source the downstream action needs
-    anyway, but its jobs run eagerly, ahead of the caller's write.  Pass
-    True/False to force either shape.  The persisted previous records and
-    source are ``functions.caching`` barriers: a sink's write scope frees
-    them at commit; outside one, ``release_caches()`` does.
-
-    A bucketed ``ScdTable`` merge attaches ``_scd_row_bound`` to the target
-    slice it passes in: the slice's manifest row count plus the batch's row
-    count.  Every source row comes from one target-slice row or one batch
-    row, so a bound within ``broadcast_max_rows`` settles the broadcast
-    without the count — the same decision, made before any job runs.
-    """
-    # Validate the RAW batch BEFORE alignment: a batch missing a
-    # config-critical column (updated_at, a unique_key component,
-    # deleted_at/created_at, an explicit check column) is a malformed
-    # input that must keep raising the reference's loud ScdConfigError —
-    # NULL-riding it as "drop-column evolution" would silently merge
-    # garbage (r13 self-review).  Only columns that SURVIVE this check
-    # can legitimately differ between the two sides.
-    cfg = cfg.validate()
-    cfg.validate_against_schema(batch.schema)
-    row_bound = getattr(target, "_scd_row_bound", None)
-    bucketing = getattr(target, "_scd_bucketing", None)
-    # Schema evolution (add/drop column) aligns the two sides next; a
-    # no-op driver-side when schemas agree (see align_evolved_schemas).
-    target, batch = align_evolved_schemas(target, batch, cfg)
-    if (
-        bucketing is not None
-        and broadcast_source is None
-        and windows is DEFAULT_WINDOWS
-        and not cfg.incremental_predicates
-    ):
-        return _bucket_local_merge(target, batch, cfg, *bucketing)
+    """The merge as its MERGE source (``build_scd2_merge_source``) joined
+    back to the target: the shape of a non-default ``windows`` strategy
+    (the salted route's hot subset), and the tests' reference for
+    :func:`_window_merge`.  The source (persisted: a ``functions.caching``
+    barrier, like ``prev``) is broadcast when its count is at most
+    ``BROADCAST_MAX_ROWS``, so the target streams through one left join."""
     source, prev, business_cols = build_scd2_merge_source(
         target, batch, cfg, windows=windows
     )
-    # The merge source (delta-sized) feeds both the broadcast join and the
-    # inserts anti-join — persist so its window chain runs once.
+    # The merge source feeds both the join and the inserts anti-join —
+    # persist so its window chain runs once.
     source = barrier(source)
-    if broadcast_source is None:
-        broadcast_source = (
-            row_bound is not None and row_bound <= broadcast_max_rows
-        ) or source.count() <= broadcast_max_rows
     audit_cols = cfg.audit_columns
     all_cols = business_cols + audit_cols
 
@@ -675,10 +639,7 @@ def scd2_incremental(
     # cannot satisfy the predicates pass through untouched —
     # get_incremental_scd2_sql.sql:247-255.
     if cfg.incremental_predicates:
-        pred = F.coalesce(
-            F.expr(" AND ".join(f"({p})" for p in cfg.incremental_predicates)),
-            F.lit(False),
-        )
+        pred = _predicate(cfg)
         tgt_in = target.filter(pred)
         tgt_out = target.filter(~pred)
     else:
@@ -686,9 +647,7 @@ def scd2_incremental(
 
     dest = tgt_in.withColumn(KEY_COL, surrogate_key(cfg.scd2_unique_key))
 
-    src = source
-    if broadcast_source:
-        src = F.broadcast(src)
+    src = F.broadcast(source) if source.count() <= BROADCAST_MAX_ROWS else source
     s_cols = {c: F.col(f"s.{c}") for c in source.columns}
     joined = dest.alias("d").join(
         src.alias("s"), F.col(f"d.{KEY_COL}") == F.col(f"s.{KEY_COL}"), "left"
@@ -739,3 +698,40 @@ def scd2_incremental(
     if tgt_out is not None:
         result = result.unionByName(tgt_out.select(*[F.col(c) for c in all_cols]))
     return result
+
+
+def scd2_incremental(
+    target: DataFrame, batch: DataFrame, cfg: ScdConfig,
+    windows: KeyWindows = DEFAULT_WINDOWS,
+) -> DataFrame:
+    """Apply one incremental SCD2 batch and return the NEW full table.
+
+    MERGE semantics (``get_incremental_scd2_sql.sql:238-268``) re-expressed
+    without Delta: the match condition is null-safe hash equality on the full
+    SCD2 key; matched 'delete' rows drop, matched 'upsert' rows update only
+    ``cfg.merge_update_cols``, unmatched 'upsert' rows insert.
+
+    The stock merge is one window chain (:func:`_window_merge`), planned
+    with no job and no persist.  A target carrying ``_scd_bucketing`` (a
+    bucketed ``ScdTable`` attaches its bucket expression and
+    affected-bucket count to the slice it passes in) runs it shuffled on
+    ``_scd_bucket``, and the result keeps that column for the sink's
+    write.  A non-default ``windows`` strategy (the salted route's hot
+    subset) merges through the MERGE source and a join-back instead
+    (:func:`_merge_via_source`)."""
+    # Validate the RAW batch BEFORE alignment: a batch missing a
+    # config-critical column (updated_at, a unique_key component,
+    # deleted_at/created_at, an explicit check column) is a malformed
+    # input that must keep raising the reference's loud ScdConfigError —
+    # NULL-riding it as "drop-column evolution" would silently merge
+    # garbage (r13 self-review).  Only columns that SURVIVE this check
+    # can legitimately differ between the two sides.
+    cfg = cfg.validate()
+    cfg.validate_against_schema(batch.schema)
+    bucketing = getattr(target, "_scd_bucketing", None)
+    # Schema evolution (add/drop column) aligns the two sides next; a
+    # no-op driver-side when schemas agree (see align_evolved_schemas).
+    target, batch = align_evolved_schemas(target, batch, cfg)
+    if windows is not DEFAULT_WINDOWS:
+        return _merge_via_source(target, batch, cfg, windows)
+    return _window_merge(target, batch, cfg, bucketing)

@@ -61,6 +61,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.caching import barrier
+from ..functions.partitioning import key_join, null_safe_key_eq, split_by_keys
 from ..plans.config import ScdConfig
 from .scd2 import (
     HASH_COL,
@@ -74,15 +75,6 @@ from .scd2 import (
 
 SALT_COL = "_scd2_salt"
 GHOST_COL = "_scd2_ghost"
-
-
-def _ns_eq(left: str, right: str, keys: Sequence[str]) -> Column:
-    """Null-safe equi-join condition over aliased key columns (unique-key
-    columns may legitimately hold NULLs)."""
-    return reduce(
-        Column.__and__,
-        [F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}")) for k in keys],
-    )
 
 
 class SaltedKeyWindows(KeyWindows):
@@ -110,7 +102,7 @@ class SaltedKeyWindows(KeyWindows):
             .agg(F.min(um).alias("_mn"), F.max(um).alias("_mx"))
         )
         joined = df.alias("d").join(
-            F.broadcast(bounds).alias("b"), _ns_eq("d", "b", keys)
+            F.broadcast(bounds).alias("b"), null_safe_key_eq("d", "b", keys)
         )
         span = F.col("b._mx") - F.col("b._mn") + F.lit(1)
         salt = (
@@ -237,7 +229,7 @@ class SaltedKeyWindows(KeyWindows):
             off = tot.withColumn(
                 "_off", F.coalesce(F.sum("_tot").over(offw), F.lit(0))
             ).withColumnRenamed(SALT_COL, "_off_salt")
-            cond = _ns_eq("o", "f", keys) & (
+            cond = null_safe_key_eq("o", "f", keys) & (
                 F.col(f"o.{SALT_COL}") == F.col("f._off_salt")
             )
             out = (
@@ -386,16 +378,6 @@ def detect_hot_keys(
     )
 
 
-def _split(df: DataFrame, cfg: ScdConfig, hot: DataFrame):
-    keys = list(cfg.unique_key)
-    cond = _ns_eq("l", "h", keys)
-    h = F.broadcast(hot.select(*keys).distinct())
-    return (
-        df.alias("l").join(h.alias("h"), cond, "left_semi"),
-        df.alias("l").join(h.alias("h"), cond, "left_anti"),
-    )
-
-
 def scd2_initial_load_salted(
     df: DataFrame,
     cfg: ScdConfig,
@@ -423,7 +405,7 @@ def scd2_initial_load_salted(
         )
     if not hot_keys.limit(1).count():
         return scd2_initial_load(df, cfg)
-    hot_df, norm_df = _split(df, cfg, hot_keys)
+    hot_df, norm_df = split_by_keys(df, cfg.unique_key, hot_keys)
     return scd2_initial_load(norm_df, cfg).unionByName(
         scd2_initial_load(hot_df, cfg, windows=SaltedKeyWindows(salts))
     )
@@ -437,7 +419,6 @@ def scd2_incremental_salted(
     hot_key_threshold: int = 1_000_000,
     hot_keys: DataFrame | None = None,
     route_log: list | None = None,
-    **kwargs,
 ) -> DataFrame:
     """``scd2_incremental`` with hot keys routed through the salted
     strategy.  Hotness counts target versions OF BATCH KEYS plus batch
@@ -474,13 +455,9 @@ def scd2_incremental_salted(
     if own_hot and row_bound is not None and row_bound < hot_key_threshold:
         if route_log is not None:
             route_log.append(("plain", 0))
-        return scd2_incremental(target, batch, cfg, **kwargs)
+        return scd2_incremental(target, batch, cfg)
     if own_hot:
-        cand = batch.select(*keys).distinct()
-        cond = _ns_eq("l", "h", keys)
-        affected = target.alias("l").join(
-            F.broadcast(cand).alias("h"), cond, "left_semi"
-        ).select(*keys)
+        affected = key_join(target, keys, batch, "left_semi").select(*keys)
         # Checkpoint barrier (not a persist): the key set feeds four joins
         # below (two semi, two anti, each broadcasting it), and each split
         # side is itself re-referenced several times inside
@@ -500,15 +477,13 @@ def scd2_incremental_salted(
     if not hot_keys.limit(1).count():
         if route_log is not None:
             route_log.append(("plain", 0))
-        return scd2_incremental(target, batch, cfg, **kwargs)
+        return scd2_incremental(target, batch, cfg)
     if route_log is not None:
         route_log.append(("salted", hot_keys.count()))
-    hot_t, norm_t = _split(target, cfg, hot_keys)
-    hot_b, norm_b = _split(batch, cfg, hot_keys)
-    norm = scd2_incremental(norm_t, norm_b, cfg, **kwargs)
-    hot = scd2_incremental(
-        hot_t, hot_b, cfg, windows=SaltedKeyWindows(salts), **kwargs
-    )
+    hot_t, norm_t = split_by_keys(target, keys, hot_keys)
+    hot_b, norm_b = split_by_keys(batch, keys, hot_keys)
+    norm = scd2_incremental(norm_t, norm_b, cfg)
+    hot = scd2_incremental(hot_t, hot_b, cfg, windows=SaltedKeyWindows(salts))
     return norm.unionByName(hot)
 
 
@@ -531,7 +506,6 @@ def scd2_incremental_adaptive(
     hot_key_threshold: int = ADAPTIVE_HOT_KEY_THRESHOLD,
     hot_keys: DataFrame | None = None,
     route_log: list | None = None,
-    **kwargs,
 ) -> DataFrame:
     """Skew-ADAPTIVE SCD2 merge strategy — the opt-in ``merge_fn`` that
     removes the know-your-skew-in-advance requirement (VERDICT r12 item
@@ -568,5 +542,4 @@ def scd2_incremental_adaptive(
         hot_key_threshold=hot_key_threshold,
         hot_keys=hot_keys,
         route_log=route_log,
-        **kwargs,
     )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.caching import barrier, scope
+from ..functions.partitioning import key_join
 from ..operators.scd01 import (
     scd0_incremental,
     scd0_initial_load,
@@ -139,10 +140,21 @@ def _write_op(method):
     not leak one dead set per attempt), and BEFORE ``refreshByPath``:
     their plans read files the commit displaced, and a refresh would
     re-cache them.  The write has materialized them, and the caller gets a
-    fresh read, so nothing runs on them again."""
+    fresh read, so nothing runs on them again.
+
+    A table directory swap (``_atomic_write``) cut between its two renames
+    leaves no table at ``path`` and the complete previous table at
+    ``path__old``.  The write first renames that back: otherwise it would
+    initial-load its batch alone and its own swap would delete
+    ``__old``, the whole history."""
 
     @functools.wraps(method)
     def run(self, *args, **kwargs):
+        old = self.path + "__old"
+        if not os.path.exists(self.path) and os.path.exists(
+            os.path.join(old, "_SUCCESS")
+        ):
+            os.rename(old, self.path)
         with scope():
             method(self, *args, **kwargs)
         self.spark.catalog.refreshByPath(self.path)
@@ -491,16 +503,6 @@ class ScdTable:
         )
         return self._full_read(manifest, files, stale)
 
-    def _key_match_cond(self, left_alias: str, right_alias: str):
-        """Null-safe business-key equality between two aliased relations —
-        the ONE condition builder for every key-addressed read/write path
-        (read_keys' semi-join, delete_keys' anti-join)."""
-        cond = None
-        for k in self.cfg.unique_key:
-            c = F.col(f"{left_alias}.{k}").eqNullSafe(F.col(f"{right_alias}.{k}"))
-            cond = c if cond is None else cond & c
-        return cond
-
     def _leaf_read(self, files: list[str], stale: bool, schema_json: str) -> DataFrame:
         """Plan a read over manifest-resolved leaf files: pin the recorded
         schema on a clean manifest, merge footers when the manifest is
@@ -546,11 +548,7 @@ class ScdTable:
         self._adopt_bucket_count(manifest)
 
         def _semi(df: DataFrame) -> DataFrame:
-            return df.alias("l").join(
-                F.broadcast(cand).alias("r"),
-                self._key_match_cond("l", "r"),
-                "left_semi",
-            )
+            return key_join(df, key_cols, cand, "left_semi")
 
         if (
             not self.partition_buckets
@@ -1780,11 +1778,7 @@ class ScdTable:
         cand = barrier(keys.select(*key_cols).distinct())
 
         def _anti(target: DataFrame, batch: DataFrame, cfg) -> DataFrame:
-            return target.alias("l").join(
-                F.broadcast(batch).alias("r"),
-                self._key_match_cond("l", "r"),
-                "left_anti",
-            )
+            return key_join(target, key_cols, batch, "left_anti")
 
         manifest = self._read_manifest()
         self._adopt_bucket_count(manifest)

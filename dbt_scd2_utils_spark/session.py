@@ -53,8 +53,7 @@ def get_spark(
         # subtrees (10-20% off the sequence replay's 60-row states) but
         # was A/B-measured to cost 15-25% on queries whose downstream
         # joins REUSE a cache's partitioning (decontaminate_semantic,
-        # scd2_bucketed_temporal_join).  The one query that wants it
-        # scopes it locally (entry.q_scd2_sequence_replay).
+        # scd2_bucketed_temporal_join).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")

@@ -5,7 +5,7 @@ The reference's MERGE (``get_incremental_scd2_sql.sql:238-268``) maps 1:1
 onto Delta's three-clause merge; this module implements that mapping so a
 Delta-enabled deployment gets true in-place merge (file-level rewrite ∝
 matched files + ``incremental_predicates`` file pruning) instead of the
-vanilla join-and-overwrite path in ``operators/scd2.py``.
+vanilla sink's window chain and full overwrite (``operators/scd2.py``).
 
 TESTING STATUS: the clause construction (:func:`build_merge_clauses`) is
 unit-tested without delta-spark; the :func:`scd2_delta_merge` execute path
@@ -15,9 +15,12 @@ run here.  A Delta-enabled deployment should validate it once against
 ``operators.scd2.scd2_incremental`` output (the clause mapping says they
 must be row-identical).
 
-The merge SOURCE is the same DataFrame ``build_scd2_merge_source`` produces
-for the vanilla path — only the sink differs, which is exactly the
-"keep the sink behind an interface" decision of SURVEY.md §7.2.
+The merge SOURCE is ``build_scd2_merge_source``'s DataFrame, the CTE chain
+the parquet sinks' window chain computes in place; the tests pin the two
+row-identical through ``operators.scd2._merge_via_source``, that source
+joined back the way this MERGE applies it — only the sink differs, which
+is exactly the "keep the sink behind an interface" decision of SURVEY.md
+§7.2.
 """
 
 from __future__ import annotations

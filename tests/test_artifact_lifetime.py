@@ -83,6 +83,30 @@ def test_iterative_loops_hold_one_state_and_release_everything(spark):
     assert _persistent(spark) == before
 
 
+def test_vanilla_merge_plans_without_artifacts_or_jobs(spark):
+    """The stock merge on an unbucketed target is one window chain: while
+    it is planned it registers nothing — neither in the session registry
+    nor in an open scope — and submits no Spark job."""
+    sc = spark.sparkContext
+    target = scd2_initial_load(_batch(spark, 1), CFG)
+    batch = _batch(spark, 2)
+    live = len(caching._LIVE_CACHES)
+    group = "vanilla-merge-planning"
+    sc.setJobGroup(group, "merge")
+    try:
+        outside = scd2_incremental(target, batch, CFG)
+        with caching.scope():
+            inside = scd2_incremental(target, batch, CFG)
+            assert caching._scopes()[-1] == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(caching._LIVE_CACHES) == live
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert outside.exceptAll(inside).count() == 0
+
+
 @pytest.mark.parametrize("buckets", [None, 4], ids=["vanilla", "bucketed"])
 def test_build_keeps_the_callers_cache(spark, tmp_path, buckets):
     """A batch the caller cached stays cached through an initial build and

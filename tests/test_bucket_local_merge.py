@@ -1,7 +1,9 @@
-"""Bucket-local SCD2 merge (the shape ``scd2_incremental`` takes on the
-bucketed sink's target slice): row-for-row equal to the broadcast
-formulation on the same slice and batch, and planned as one shuffle on
-``_scd_bucket`` with no join and no persisted intermediate."""
+"""The SCD2 window chain (``operators/scd2.py::_window_merge``, the merge
+``scd2_incremental`` plans on both sinks): row-for-row equal to the MERGE
+source joined back (``_merge_via_source``) on the same target and batch,
+in both shapes — the vanilla split and the bucketed sink's slice — and on
+the bucketed sink planned as one shuffle on ``_scd_bucket`` with no join
+and no persisted intermediate."""
 
 from __future__ import annotations
 
@@ -19,6 +21,11 @@ from pyspark.sql.types import (
 
 from dbt_scd2_utils_spark import ScdConfig, scd2_incremental, scd2_initial_load
 from dbt_scd2_utils_spark.functions import caching
+from dbt_scd2_utils_spark.operators.scd2 import (
+    DEFAULT_WINDOWS,
+    _merge_via_source,
+    align_evolved_schemas,
+)
 from dbt_scd2_utils_spark.plans.build import BUCKET_COL, ScdTable
 from tests.fixtures.seeds import CUSTOMERS_RAW, CUSTOMERS_SCHEMA
 
@@ -97,11 +104,15 @@ LIFECYCLE = {
 
 
 def _merge_both(spark, cfg, history, batch, n_buckets=2):
-    """(broadcast formulation, bucket-local) results for the same target
-    and batch, as row multisets over the same columns."""
+    """(MERGE source joined back, vanilla chain, bucket-local chain)
+    results for the same target and batch, as row multisets over the same
+    columns."""
     target = scd2_initial_load(history, cfg)
     target = spark.createDataFrame(target.collect() + GAPPED, target.schema)
-    broadcast = scd2_incremental(target, batch, cfg)
+    reference = _merge_via_source(
+        *align_evolved_schemas(target, batch, cfg), cfg, DEFAULT_WINDOWS
+    )
+    vanilla = scd2_incremental(target, batch, cfg)
     sliced = target.select("*")  # a separate frame to carry the attribute
     sliced._scd_bucketing = (
         ScdTable(spark, "unused", cfg, partition_buckets=3)._bucket_expr(sliced),
@@ -110,8 +121,25 @@ def _merge_both(spark, cfg, history, batch, n_buckets=2):
     local = scd2_incremental(sliced, batch, cfg)
     assert BUCKET_COL in local.columns
     local = local.drop(BUCKET_COL)
-    assert local.columns == broadcast.columns
-    return Counter(map(tuple, broadcast.collect())), Counter(map(tuple, local.collect()))
+    assert vanilla.columns == local.columns == reference.columns
+    return [Counter(map(tuple, r.collect())) for r in (reference, vanilla, local)]
+
+
+def _assert_chain_equals_merge_source(spark, cfg, history, batch, n_buckets=2):
+    reference, vanilla, local = _merge_both(spark, cfg, history, batch, n_buckets)
+    assert vanilla == reference
+    assert local == reference
+    return reference
+
+
+def _cfg(lifecycle, update_all, collapse, predicates=()):
+    return ScdConfig(
+        unique_key=("k1", "k2"),
+        update_all_previous_records=update_all,
+        collapse_redundant_versions=collapse,
+        incremental_predicates=predicates,
+        **LIFECYCLE[lifecycle],
+    )
 
 
 @pytest.mark.filterwarnings("ignore:update_all_previous_records")
@@ -120,32 +148,51 @@ def _merge_both(spark, cfg, history, batch, n_buckets=2):
 @pytest.mark.parametrize("update_all", [True, False])
 @pytest.mark.parametrize("collapse", [True, False])
 def test_bucket_local_equals_broadcast(spark, lifecycle, update_all, collapse):
-    cfg = ScdConfig(
-        unique_key=("k1", "k2"),
-        update_all_previous_records=update_all,
-        collapse_redundant_versions=collapse,
-        **LIFECYCLE[lifecycle],
-    )
-    broadcast, local = _merge_both(
-        spark, cfg,
+    reference = _assert_chain_equals_merge_source(
+        spark, _cfg(lifecycle, update_all, collapse),
         spark.createDataFrame(HISTORY, SCHEMA),
         spark.createDataFrame(BATCH, SCHEMA),
     )
-    assert local == broadcast
-    assert sum(broadcast.values()) > len(HISTORY) // 2
+    assert sum(reference.values()) > len(HISTORY) // 2
+
+
+# incremental_predicates AND into the MERGE ON clause: a target row they
+# exclude passes through unchanged, and its merge copy inserts if it
+# survives.  Both predicates exclude rows of touched keys here.
+PREDICATES = {
+    "current": ("_is_current = true",),
+    "valid_to": ("_valid_to >= timestamp'2024-01-06 00:00:00'",),
+}
+
+
+@pytest.mark.filterwarnings("ignore:update_all_previous_records")
+@pytest.mark.filterwarnings("ignore:collapse_redundant_versions")
+@pytest.mark.parametrize("predicates", sorted(PREDICATES))
+@pytest.mark.parametrize("lifecycle", sorted(LIFECYCLE))
+@pytest.mark.parametrize("update_all", [True, False])
+@pytest.mark.parametrize("collapse", [True, False])
+def test_bucket_local_equals_broadcast_with_predicates(
+    spark, predicates, lifecycle, update_all, collapse
+):
+    _assert_chain_equals_merge_source(
+        spark, _cfg(lifecycle, update_all, collapse, PREDICATES[predicates]),
+        spark.createDataFrame(HISTORY, SCHEMA),
+        spark.createDataFrame(BATCH, SCHEMA),
+    )
 
 
 @pytest.mark.parametrize("evolution", ["add", "drop"])
 def test_bucket_local_equals_broadcast_under_schema_evolution(spark, evolution):
-    cfg = ScdConfig(unique_key=("k1", "k2"), **LIFECYCLE["set"])
     history = spark.createDataFrame(HISTORY, SCHEMA)
     batch = spark.createDataFrame(BATCH, SCHEMA)
     if evolution == "add":
         batch = batch.withColumn("tier", batch["amount"] % 3)
     else:  # the target keeps `amount`; the batch drops it
         batch = batch.drop("amount")
-    broadcast, local = _merge_both(spark, cfg, history, batch, n_buckets=3)
-    assert local == broadcast
+    _assert_chain_equals_merge_source(
+        spark, ScdConfig(unique_key=("k1", "k2"), **LIFECYCLE["set"]),
+        history, batch, n_buckets=3,
+    )
 
 
 def test_bucketed_commit_merges_bucket_local(spark, tmp_path):

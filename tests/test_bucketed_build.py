@@ -1500,14 +1500,13 @@ def test_bucketed_sink_composes_with_salted_merge(spark, tmp_path):
 
 class _MergeProbe:
     """``merge_fn`` wrapper recording, per merge call, the row bound the
-    sink attached to the target slice, whether the merge broadcasts its
-    source (the hint on the target LEFT JOIN source), and the Spark jobs
-    the call submitted (under its own job group) before returning."""
+    sink attached to the target slice and the Spark jobs the call
+    submitted (under its own job group) before returning."""
 
     def __init__(self, spark, strategy):
         self.sc = spark.sparkContext
         self.strategy = strategy
-        self.bounds, self.broadcasts, self.results, self._groups = [], [], [], []
+        self.bounds, self.results, self._groups = [], [], []
 
     def __call__(self, target, batch, cfg):
         group = f"merge_fn-{id(self)}-{len(self._groups)}"
@@ -1519,11 +1518,8 @@ class _MergeProbe:
         finally:
             self.sc.setLocalProperty("spark.jobGroup.id", None)
             self.sc.setLocalProperty("spark.job.description", None)
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        self.broadcasts += [
-            "rightHint=(strategy=broadcast)" in line
-            for line in plan.splitlines() if "Join LeftOuter" in line
-        ]
+        # Plan while the batch is still cached (build() releases it).
+        out._jdf.queryExecution().executedPlan()
         self.results.append(out)
         return out
 
@@ -1551,9 +1547,9 @@ def _probed_table(spark, path, **kw):
 
 def test_manifest_bound_merge_submits_no_jobs(spark, tmp_path):
     """With the manifest's row counts known, the adaptive merge settles
-    both the hot-key route and the broadcast from the bound: the
-    ``merge_fn`` call inside ``build`` is plan construction only, and the
-    table equals the unbucketed build."""
+    the hot-key route from the bound: the ``merge_fn`` call inside
+    ``build`` is plan construction only, and the table equals the
+    unbucketed build."""
     t, probe, routes = _probed_table(spark, str(tmp_path / "bound"))
     b2 = spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA)
     out = t.build(b2)
@@ -1572,32 +1568,19 @@ def test_merge_plans_one_lag_of_the_content_hash(spark, tmp_path):
     """The run ids and the changes-only filter read one materialized
     ``lag(_scd2_hash)``: Catalyst extracts every inline occurrence of a
     window expression into its own window column, so a lag written twice
-    is computed twice.  The bucket-local merge computes it once; the
-    broadcast chain's plan repeats its cached merge source once per
-    reference, and no ``Window`` in it computes the lag twice."""
-    from dbt_scd2_utils_spark import scd2_incremental, scd2_initial_load
+    is computed twice.  The chain computes it once on both sinks: the
+    bucketed slice and the vanilla sink's whole table."""
+    from dbt_scd2_utils_spark import scd2_incremental
 
     t, probe, _ = _probed_table(spark, str(tmp_path / "lag"))
     b2 = spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA)
     t.build(b2)
-    broadcast = scd2_incremental(
-        scd2_initial_load(
-            spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA), CFG
-        ),
-        b2,
-        CFG,
-        broadcast_source=True,
-    )
-    plans = [
-        m._jdf.queryExecution().executedPlan().toString()
-        for m in (probe.results[0], broadcast)
-    ]
-    assert plans[0].count("lag(_scd2_hash") == 1, plans[0]
-    for plan in plans:
-        windows = [ln for ln in plan.splitlines() if "Window [" in ln]
-        assert windows and all(
-            ln.count("lag(_scd2_hash") <= 1 for ln in windows
-        ), plan
+    v = ScdTable(spark, str(tmp_path / "vanilla"), CFG)
+    v.build(spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA))
+    vanilla = scd2_incremental(v.read(), b2, CFG)
+    for m in (probe.results[0], vanilla):
+        plan = m._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("lag(_scd2_hash") == 1, plan
 
 
 def _assert_probed_fallback(spark, tmp_path, t, probe):
@@ -1643,19 +1626,6 @@ def test_manifest_bound_at_threshold_still_detects_hot_keys(spark, tmp_path):
     assert probe.bounds[0] is not None and probe.bounds[0] >= 3
     assert probe.jobs()
     assert [r for r, _ in routes] == ["salted"]
-    _assert_same(out, _expected(spark, str(tmp_path / "p"),
-                                [CUSTOMERS_RAW[1], CUSTOMERS_RAW[2]]))
-
-
-def test_manifest_bound_loses_to_explicit_broadcast_false(spark, tmp_path):
-    """An explicit ``broadcast_source=False`` wins over the bound: the merge
-    source carries no broadcast hint."""
-    t, probe, routes = _probed_table(
-        spark, str(tmp_path / "nobc"), broadcast_source=False
-    )
-    out = t.build(spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA))
-    assert probe.bounds[0] is not None and routes == [("plain", 0)]
-    assert probe.broadcasts == [False]
     _assert_same(out, _expected(spark, str(tmp_path / "p"),
                                 [CUSTOMERS_RAW[1], CUSTOMERS_RAW[2]]))
 

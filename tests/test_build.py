@@ -51,3 +51,32 @@ def test_scd_build_functional(spark, tmp_path):
     )
     assert out2.count() >= n1
     assert out2.filter(~F.col("_is_current")).count() == 0
+
+
+def test_swap_cut_between_renames_keeps_history(spark, tmp_path):
+    """A vanilla write swaps the table directory in two renames (table ->
+    ``__old``, ``__tmp`` -> table).  A crash between them leaves no table;
+    the next build must put the previous table back and merge into it,
+    not initial-load its batch alone and delete ``__old``."""
+    import os
+
+    batches = [
+        spark.createDataFrame(CUSTOMERS_RAW[i], CUSTOMERS_SCHEMA) for i in (1, 2, 3)
+    ]
+    path = str(tmp_path / "cut")
+    cut = ScdTable(spark, path, CFG)
+    cut.build(batches[0])
+    cut.build(batches[1])
+    # The crashed third write: its staged table is half written, and the
+    # first rename has happened.
+    os.rename(path, path + "__old")
+    os.makedirs(path + "__tmp")
+    open(os.path.join(path + "__tmp", "part-00000.parquet"), "w").close()
+    out = cut.build(batches[2])
+
+    clean = ScdTable(spark, str(tmp_path / "clean"), CFG)
+    for b in batches:
+        expected = clean.build(b)
+    assert not os.path.exists(path + "__old")
+    assert out.exceptAll(expected).count() == 0
+    assert expected.exceptAll(out).count() == 0

@@ -40,17 +40,39 @@ def scd_feed(spark):
 def test_scd2_merge_plan_broadcasts_and_never_nested_loops(spark, scd_feed):
     cfg = ScdConfig(unique_key=("k",))
     split = F.lit("2020-03-01").cast("timestamp")
-    state = scd2_initial_load(scd_feed.filter(F.col("_updated_at") < split), cfg).persist()
-    try:
-        out = scd2_incremental(state, scd_feed.filter(F.col("_updated_at") >= split), cfg)
-        plan = plan_of(out)
-        for bad in BAD_NODES:
-            assert bad not in plan, f"{bad} in merge plan"
-        # The affected-keys slice is an explicit broadcast LEFT SEMI — the
-        # target must stream against a broadcast, never shuffle for it.
-        assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    finally:
-        state.unpersist()
+    state = scd2_initial_load(scd_feed.filter(F.col("_updated_at") < split), cfg)
+    state = spark.createDataFrame(state.collect(), state.schema)  # a stored table
+    plan = plan_of(scd2_incremental(state, scd_feed.filter(F.col("_updated_at") >= split), cfg))
+    for bad in BAD_NODES:
+        assert bad not in plan, f"{bad} in merge plan"
+    # The batch's keys cut the target with a broadcast LEFT SEMI / LEFT ANTI
+    # pair — the target streams against a broadcast, never shuffles for it
+    # — and only the touched rows and the batch are shuffled, once, on the
+    # key.  No join-back and no persisted intermediate.
+    assert "BroadcastHashJoin" in plan, plan
+    assert "LeftSemi" in plan and "LeftAnti" in plan, plan
+    assert "LeftOuter" not in plan, plan
+    assert plan.count("Exchange hashpartitioning(") == 1, plan
+    assert "Exchange hashpartitioning(k#" in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
+
+
+def test_scd2_merge_plan_with_predicates_stays_bucket_local(spark, scd_feed):
+    """incremental_predicates no longer force a join shape: a bucketed
+    slice merges with one Exchange, on ``_scd_bucket``, and no join."""
+    from dbt_scd2_utils_spark.plans.build import BUCKET_COL, ScdTable
+
+    cfg = ScdConfig(unique_key=("k",), incremental_predicates=("_is_current = true",))
+    split = F.lit("2020-03-01").cast("timestamp")
+    state = scd2_initial_load(scd_feed.filter(F.col("_updated_at") < split), cfg)
+    state = spark.createDataFrame(state.collect(), state.schema)
+    state._scd_bucketing = (
+        ScdTable(spark, "unused", cfg, partition_buckets=4)._bucket_expr(state), 4
+    )
+    plan = plan_of(scd2_incremental(state, scd_feed.filter(F.col("_updated_at") >= split), cfg))
+    assert plan.count("Exchange") == 1, plan
+    assert f"Exchange hashpartitioning({BUCKET_COL}#" in plan, plan
+    assert "Join" not in plan, plan
 
 
 def test_scd2_join_spine_is_equi_join(spark, scd_feed):
@@ -409,6 +431,7 @@ def test_delete_keys_merge_plan_broadcast_anti_no_nested_loop(spark, tmp_path):
     shuffle before the bucket-partitioned write)."""
     from tests.fixtures.seeds import CUSTOMERS_RAW, CUSTOMERS_SCHEMA
 
+    from dbt_scd2_utils_spark.functions.partitioning import key_join
     from dbt_scd2_utils_spark.plans.build import ScdTable
 
     cfg = ScdConfig(unique_key=("customer_id",), deleted_at_column="deleted_at")
@@ -417,11 +440,7 @@ def test_delete_keys_merge_plan_broadcast_anti_no_nested_loop(spark, tmp_path):
     files, stale = t._affected_files(t._read_manifest(), list(range(8)))
     slice_df = spark.read.parquet(*files)
     keys = spark.createDataFrame([(1,), (2,)], "customer_id int")
-    anti = slice_df.alias("l").join(
-        F.broadcast(keys).alias("r"),
-        t._key_match_cond("l", "r"),
-        "left_anti",
-    )
+    anti = key_join(slice_df, cfg.unique_key, keys, "left_anti")
     plan = plan_of(anti)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     for bad in BAD_NODES:
