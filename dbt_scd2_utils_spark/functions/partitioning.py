@@ -47,7 +47,9 @@ def key_join(
     """``df``'s rows whose key does (``how="left_semi"``) or does not
     (``"left_anti"``) occur in ``key_rows``: a broadcast join, null-safe on
     ``keys``, so ``df`` streams and is never shuffled.  Duplicate keys in
-    ``key_rows`` change neither result, and the build side drops them."""
+    ``key_rows`` change neither result, but every row of ``key_rows`` is
+    collected to the driver before the build side drops them: pass a
+    distinct key set when it may hold many rows per key."""
     h = F.broadcast(key_rows.select(*keys)).alias("h")
     return df.alias("l").join(h, null_safe_key_eq("l", "h", keys), how)
 
@@ -55,7 +57,10 @@ def key_join(
 def split_by_keys(
     df: DataFrame, keys: Sequence[str], key_rows: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """(``df``'s rows whose key occurs in ``key_rows``, the rest)."""
+    """(``df``'s rows whose key occurs in ``key_rows``, the rest).  The
+    broadcast holds ``key_rows``' distinct keys: a change batch carries
+    many versions per key, and its small side pays the one Exchange."""
+    key_rows = key_rows.select(*keys).distinct()
     return (
         key_join(df, keys, key_rows, "left_semi"),
         key_join(df, keys, key_rows, "left_anti"),

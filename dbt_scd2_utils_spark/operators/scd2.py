@@ -566,11 +566,34 @@ def _window_merge(
     rows = rows.withColumn(IN_MERGE_COL, in_merge)
     merging = F.col(IN_MERGE_COL)
     part = [*scope, *keys, IN_MERGE_COL]
+    # A target row the MERGE can match: not a predicate-failing row's copy.
+    matchable = F.col(PRIORITY_COL) == 0
+    if flags:
+        matchable = matchable & ~F.col("_pt") & ~F.col("_unm")
 
     # pick_a_key_any_key: previous wins (priority 0 < 17), then values.
+    # The first merging row of a (key, updated_at) group is its MERGE
+    # source row; the group's other matchable target rows (a full key an
+    # earlier predicate merge duplicated) stay, as followers of it.
+    rows = (
+        rows.withColumn(
+            "_is_dup", _is_dup_expr(rows, cfg, business_cols, True, part)
+        )
+        .withColumn("_fol", merging & F.col("_is_dup") & matchable)
+        .filter(~merging | ~F.col("_is_dup") | F.col("_fol"))
+    )
+    source_row = merging & ~F.col("_fol")
+    # A follower takes its source row's content hash: the lag and the
+    # content runs below see one version per group.
+    peers_up_to = key_window(part, u).rangeBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
     rows = rows.withColumn(
-        "_is_dup", _is_dup_expr(rows, cfg, business_cols, True, part)
-    ).filter(~(merging & F.col("_is_dup")))
+        HASH_COL,
+        F.last(F.when(source_row, F.col(HASH_COL)), ignorenulls=True).over(
+            peers_up_to
+        ),
+    )
 
     rows = rows.withColumn(
         PREV_HASH_COL, F.lag(HASH_COL).over(key_window(part, u))
@@ -583,7 +606,7 @@ def _window_merge(
         ).withColumn(
             "_rrn",
             F.row_number().over(
-                Window.partitionBy(*part, RUN_ID_COL).orderBy(
+                Window.partitionBy(*part, "_fol", RUN_ID_COL).orderBy(
                     *_survivor_order(cfg, business_cols)
                 )
             ),
@@ -595,20 +618,39 @@ def _window_merge(
             | (F.col(HASH_COL) != F.col(PREV_HASH_COL))
             | ~is_new  # never drop a persisted version
         )
-    if flags:  # a J2-pruned merge copy drops: its pass-through copy stands for it
-        rows = rows.filter((~merging & ~F.col("_unm")) | (merging & keep))
+    if flags:
         is_new = is_new | F.col("_unm")  # an unmatched survivor inserts
-    else:
-        rows = rows.filter(~merging | keep)
+
+    # The canonical timeline: the kept source rows.  Each group's source
+    # row hands its keep flag and recomputed audit values to the group;
+    # the MERGE applies them to the source row and every follower, and
+    # inserts a new (or unmatched) source row only when no target row of
+    # its group matches.
+    rows = rows.withColumn("_tl", source_row & keep)
+    timeline = [*scope, *keys, "_tl"]
+    group = Window.partitionBy(*scope, *keys, u)
+    recomputed = F.struct(
+        F.col("_tl").alias("_keep"),
+        *[e.alias(c) for e, c in zip(_audit_exprs(cfg, timeline), cfg.audit_columns)],
+    )
+    rows = rows.withColumns({
+        "_src": F.first(F.when(source_row, recomputed), ignorenulls=True).over(group),
+        "_matched": F.max(matchable & ~source_row).over(group),
+    })
+    touched = F.col("_src").isNotNull() & (source_row | matchable)
+    emit = F.when(
+        touched, F.col("_src._keep") & (matchable | ~F.col("_matched"))
+    ).otherwise(~F.col("_unm") if flags else F.lit(True))
 
     update_set = {c.lower() for c in cfg.merge_update_cols}
-    merged = rows.select(
+    merged = rows.filter(emit).select(
         *business_cols,
         *[
             F.when(
-                merging & (is_new | F.lit(c.lower() in update_set)), e
+                touched & ((source_row & is_new) | F.lit(c.lower() in update_set)),
+                F.col("_src")[c],
             ).otherwise(F.col(old[c])).alias(c)
-            for e, c in zip(_audit_exprs(cfg, part), cfg.audit_columns)
+            for c in cfg.audit_columns
         ],
         *scope,
     )

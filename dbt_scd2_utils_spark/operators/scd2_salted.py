@@ -457,7 +457,9 @@ def scd2_incremental_salted(
             route_log.append(("plain", 0))
         return scd2_incremental(target, batch, cfg)
     if own_hot:
-        affected = key_join(target, keys, batch, "left_semi").select(*keys)
+        affected = key_join(
+            target, keys, batch.select(*keys).distinct(), "left_semi"
+        ).select(*keys)
         # Checkpoint barrier (not a persist): the key set feeds four joins
         # below (two semi, two anti, each broadcasting it), and each split
         # side is itself re-referenced several times inside

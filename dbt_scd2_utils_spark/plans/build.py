@@ -146,12 +146,16 @@ def _write_op(method):
     leaves no table at ``path`` and the complete previous table at
     ``path__old``.  The write first renames that back: otherwise it would
     initial-load its batch alone and its own swap would delete
-    ``__old``, the whole history."""
+    ``__old``, the whole history.  A swap cut after its second rename
+    leaves a complete table and a stale ``__old``, which the write
+    removes: the next swap's first rename would fail on it."""
 
     @functools.wraps(method)
     def run(self, *args, **kwargs):
         old = self.path + "__old"
-        if not os.path.exists(self.path) and os.path.exists(
+        if os.path.exists(os.path.join(self.path, "_SUCCESS")):
+            shutil.rmtree(old, ignore_errors=True)
+        elif not os.path.exists(self.path) and os.path.exists(
             os.path.join(old, "_SUCCESS")
         ):
             os.rename(old, self.path)

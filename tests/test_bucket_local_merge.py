@@ -103,12 +103,16 @@ LIFECYCLE = {
 }
 
 
-def _merge_both(spark, cfg, history, batch, n_buckets=2):
+def _target(spark, cfg, history):
+    """The initial load of ``history`` plus the GAPPED key's stored rows."""
+    target = scd2_initial_load(history, cfg)
+    return spark.createDataFrame(target.collect() + GAPPED, target.schema)
+
+
+def _merge_both(spark, cfg, target, batch, n_buckets=2):
     """(MERGE source joined back, vanilla chain, bucket-local chain)
     results for the same target and batch, as row multisets over the same
     columns."""
-    target = scd2_initial_load(history, cfg)
-    target = spark.createDataFrame(target.collect() + GAPPED, target.schema)
     reference = _merge_via_source(
         *align_evolved_schemas(target, batch, cfg), cfg, DEFAULT_WINDOWS
     )
@@ -125,8 +129,8 @@ def _merge_both(spark, cfg, history, batch, n_buckets=2):
     return [Counter(map(tuple, r.collect())) for r in (reference, vanilla, local)]
 
 
-def _assert_chain_equals_merge_source(spark, cfg, history, batch, n_buckets=2):
-    reference, vanilla, local = _merge_both(spark, cfg, history, batch, n_buckets)
+def _assert_chain_equals_merge_source(spark, cfg, target, batch, n_buckets=2):
+    reference, vanilla, local = _merge_both(spark, cfg, target, batch, n_buckets)
     assert vanilla == reference
     assert local == reference
     return reference
@@ -148,9 +152,9 @@ def _cfg(lifecycle, update_all, collapse, predicates=()):
 @pytest.mark.parametrize("update_all", [True, False])
 @pytest.mark.parametrize("collapse", [True, False])
 def test_bucket_local_equals_broadcast(spark, lifecycle, update_all, collapse):
+    cfg = _cfg(lifecycle, update_all, collapse)
     reference = _assert_chain_equals_merge_source(
-        spark, _cfg(lifecycle, update_all, collapse),
-        spark.createDataFrame(HISTORY, SCHEMA),
+        spark, cfg, _target(spark, cfg, spark.createDataFrame(HISTORY, SCHEMA)),
         spark.createDataFrame(BATCH, SCHEMA),
     )
     assert sum(reference.values()) > len(HISTORY) // 2
@@ -174,10 +178,55 @@ PREDICATES = {
 def test_bucket_local_equals_broadcast_with_predicates(
     spark, predicates, lifecycle, update_all, collapse
 ):
+    cfg = _cfg(lifecycle, update_all, collapse, PREDICATES[predicates])
     _assert_chain_equals_merge_source(
-        spark, _cfg(lifecycle, update_all, collapse, PREDICATES[predicates]),
-        spark.createDataFrame(HISTORY, SCHEMA),
+        spark, cfg, _target(spark, cfg, spark.createDataFrame(HISTORY, SCHEMA)),
         spark.createDataFrame(BATCH, SCHEMA),
+    )
+
+
+# A later batch over the full keys a predicate merge duplicated: a late
+# version between the two copies' valid_to values (so J2 pruning keeps one
+# copy of b1 and not the other), one on a duplicated version, one after
+# it, an earlier-loaded copy of a1 that collapses the duplicated a1 out,
+# and new versions.
+LATER = [
+    _row("b", 2, "b2z", 21, _ts(4, 12), loaded=_ts(22)),
+    _row("b", 2, "b3", 30, _ts(5), loaded=_ts(22)),
+    _row("b", 2, "b3y", 33, _ts(5, 12), loaded=_ts(22)),
+    _row("a", None, "a1", 5, _ts(3), loaded=datetime(2023, 12, 31)),
+    _row("a", None, "a4", 4, _ts(13), loaded=_ts(22)),
+    _row("c", 3, "c3", 1, _ts(14), loaded=_ts(22)),
+]
+
+
+@pytest.mark.filterwarnings("ignore:update_all_previous_records")
+@pytest.mark.filterwarnings("ignore:collapse_redundant_versions")
+@pytest.mark.parametrize("predicates", sorted(PREDICATES))
+@pytest.mark.parametrize("update_all", [True, False])
+@pytest.mark.parametrize("collapse", [True, False])
+@pytest.mark.parametrize("again", [False, True])
+def test_chain_matches_every_row_of_a_duplicated_full_key(
+    spark, predicates, update_all, collapse, again
+):
+    """A merge with predicates inserts a second row for a full key (the
+    reference's documented hazard).  The MERGE of a later batch matches
+    every row of that key to its one source row: each is updated, or
+    deleted when the source row collapses out, and none is dropped as a
+    duplicate."""
+    first = _cfg("set", update_all, collapse, PREDICATES[predicates])
+    target = _merge_via_source(
+        _target(spark, first, spark.createDataFrame(HISTORY, SCHEMA)),
+        spark.createDataFrame(BATCH, SCHEMA), first, DEFAULT_WINDOWS,
+    )
+    target = spark.createDataFrame(target.collect(), target.schema)
+    full_keys = Counter((r.k1, r.k2, r._updated_at) for r in target.collect())
+    assert max(full_keys.values()) == 2
+    second = _cfg(
+        "set", update_all, collapse, PREDICATES[predicates] if again else ()
+    )
+    _assert_chain_equals_merge_source(
+        spark, second, target, spark.createDataFrame(LATER, SCHEMA)
     )
 
 
@@ -189,9 +238,9 @@ def test_bucket_local_equals_broadcast_under_schema_evolution(spark, evolution):
         batch = batch.withColumn("tier", batch["amount"] % 3)
     else:  # the target keeps `amount`; the batch drops it
         batch = batch.drop("amount")
+    cfg = ScdConfig(unique_key=("k1", "k2"), **LIFECYCLE["set"])
     _assert_chain_equals_merge_source(
-        spark, ScdConfig(unique_key=("k1", "k2"), **LIFECYCLE["set"]),
-        history, batch, n_buckets=3,
+        spark, cfg, _target(spark, cfg, history), batch, n_buckets=3
     )
 
 

@@ -55,24 +55,33 @@ def test_scd_build_functional(spark, tmp_path):
 
 def test_swap_cut_between_renames_keeps_history(spark, tmp_path):
     """A vanilla write swaps the table directory in two renames (table ->
-    ``__old``, ``__tmp`` -> table).  A crash between them leaves no table;
-    the next build must put the previous table back and merge into it,
-    not initial-load its batch alone and delete ``__old``."""
+    ``__old``, ``__tmp`` -> table), then deletes ``__old``.  A crash
+    between the renames leaves no table; the next build must put the
+    previous table back and merge into it, not initial-load its batch
+    alone and delete ``__old``.  A crash before the delete leaves a stale
+    ``__old``; the next build must remove it, not fail its own swap on
+    it."""
     import os
+    import shutil
 
     batches = [
-        spark.createDataFrame(CUSTOMERS_RAW[i], CUSTOMERS_SCHEMA) for i in (1, 2, 3)
+        spark.createDataFrame(CUSTOMERS_RAW[i], CUSTOMERS_SCHEMA) for i in (1, 2, 3, 4)
     ]
     path = str(tmp_path / "cut")
     cut = ScdTable(spark, path, CFG)
     cut.build(batches[0])
     cut.build(batches[1])
-    # The crashed third write: its staged table is half written, and the
-    # first rename has happened.
+    # The third write crashed between the renames: its staged table is
+    # half written, and the first rename has happened.
     os.rename(path, path + "__old")
     os.makedirs(path + "__tmp")
     open(os.path.join(path + "__tmp", "part-00000.parquet"), "w").close()
-    out = cut.build(batches[2])
+    cut.build(batches[2])
+    assert not os.path.exists(path + "__old")
+    # The third write crashed before its delete: the table it replaced
+    # still sits at __old.
+    shutil.copytree(path, path + "__old")
+    out = cut.build(batches[3])
 
     clean = ScdTable(spark, str(tmp_path / "clean"), CFG)
     for b in batches:

@@ -45,15 +45,18 @@ def test_scd2_merge_plan_broadcasts_and_never_nested_loops(spark, scd_feed):
     plan = plan_of(scd2_incremental(state, scd_feed.filter(F.col("_updated_at") >= split), cfg))
     for bad in BAD_NODES:
         assert bad not in plan, f"{bad} in merge plan"
-    # The batch's keys cut the target with a broadcast LEFT SEMI / LEFT ANTI
-    # pair — the target streams against a broadcast, never shuffles for it
-    # — and only the touched rows and the batch are shuffled, once, on the
-    # key.  No join-back and no persisted intermediate.
-    assert "BroadcastHashJoin" in plan, plan
+    # The batch's distinct keys cut the target with a broadcast LEFT SEMI /
+    # LEFT ANTI pair — the target streams against a broadcast, never
+    # shuffles for it — and only the touched rows and the batch are
+    # shuffled, once, on the key.  Each broadcast sits on the key set's own
+    # distinct, one more Exchange in this initial plan (adaptive execution
+    # reuses one broadcast for both).  No join-back and no persisted
+    # intermediate.
     assert "LeftSemi" in plan and "LeftAnti" in plan, plan
     assert "LeftOuter" not in plan, plan
-    assert plan.count("Exchange hashpartitioning(") == 1, plan
-    assert "Exchange hashpartitioning(k#" in plan, plan
+    assert plan.count("BroadcastExchange") == 2, plan
+    assert plan.count("Exchange hashpartitioning(k#") == 3, plan
+    assert plan.count("Exchange hashpartitioning(") == 3, plan
     assert "InMemoryTableScan" not in plan, plan
 
 

@@ -187,6 +187,41 @@ def test_no_collapse_retains_versions(spark):
     assert [r["_is_current"] for r in rows] == [False, True]
 
 
+def test_merge_source_shuffles_over_the_broadcast_cap(spark, monkeypatch):
+    """The MERGE-source join-back (the salted hot subset's merge)
+    broadcasts its source only up to ``BROADCAST_MAX_ROWS`` rows; over the
+    cap it falls back to a shuffled join, with identical results."""
+    from collections import Counter
+
+    from dbt_scd2_utils_spark.operators import scd2
+
+    cfg = ScdConfig(unique_key=("customer_id",), deleted_at_column="deleted_at")
+    b1 = spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA)
+    b2 = spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA)
+    target = scd2_initial_load(b1, cfg).persist()
+
+    broadcast = scd2._merge_via_source(target, b2, cfg, scd2.DEFAULT_WINDOWS)
+    monkeypatch.setattr(scd2, "BROADCAST_MAX_ROWS", 0)
+    shuffled = scd2._merge_via_source(target, b2, cfg, scd2.DEFAULT_WINDOWS)
+    # Size-based broadcasting off: the hint alone decides the join-back.
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        join_back = [
+            next(
+                line for line in df._jdf.queryExecution().executedPlan()
+                .toString().splitlines() if "LeftOuter" in line
+            )
+            for df in (broadcast, shuffled)
+        ]
+    finally:
+        spark.conf.set(threshold, saved)
+    assert "BroadcastHashJoin" in join_back[0]
+    assert "SortMergeJoin" in join_back[1] or "ShuffledHashJoin" in join_back[1]
+    assert Counter(shuffled.collect()) == Counter(broadcast.collect())
+
+
 def test_incremental_predicates_mirror_merge_on_semantics(spark):
     """incremental_predicates AND into the MERGE ON clause
     (get_incremental_scd2_sql.sql:247-255): a predicate-excluded target row
